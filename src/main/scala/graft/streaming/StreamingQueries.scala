@@ -375,13 +375,20 @@ object StreamingQueries {
   }
 
   def streamPattern(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import PatternStream._
     val path = s"$dir/events.parquet"
     val schema = schemaOf(spark, path)
     val src = graft.Tables.normalizeEvents(
       spark.readStream.schema(schema).parquet(closedStreamDir(spark, path)))
       .withWatermark("ts", "1 hour")
+    runToTable(spark, sequenceTransform(src), "graft_s2_sink", "append")
+  }
+
+  /** The s2 signup → purchase sequence over a watermarked event frame,
+    * exposed so the split-invariance spec can drive it.
+    */
+  private[graft] def sequenceTransform(src: DataFrame): DataFrame = {
+    import src.sparkSession.implicits._
+    import PatternStream._
     val gev = src.select(
       col("event_id"),
       col("user_id").cast("string").as("key"),
@@ -392,12 +399,11 @@ object StreamingQueries {
       map(lit("uid"), col("user_id").cast("string")).as("payload")).as[GEv]
     val matches = detectGeneric(gev,
       IndexedSeq(GStepSpec(), GStepSpec()),
-      withinUs = 1800L * 1000000L)(spark).toDF()
-    val out = matches.select(
+      withinUs = 1800L * 1000000L)(src.sparkSession).toDF()
+    matches.select(
       col("key").cast("long").as("user_id"),
       col("ids")(0).as("a_id"), col("ids")(1).as("b_id"),
       col("span_us"))
-    runToTable(spark, out, "graft_s2_sink", "append")
   }
 
   /** #22b-streaming: Kleene `signup -> error+ -> purchase within 8h`
@@ -496,9 +502,18 @@ object StreamingQueries {
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"), unix_micros(col("ts")).as("ts_us"), col("ts"))
       .as[PatternStream.Ev]
+    runToTable(spark, emaTransform(src).toDF(), "graft_s9_sink", "append")
+  }
+
+  /** The s9 fold, exposed so the split-invariance spec can drive it. */
+  private[graft] def emaTransform(
+      src: org.apache.spark.sql.Dataset[PatternStream.Ev])
+      : org.apache.spark.sql.Dataset[EmaOut] = {
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    import src.sparkSession.implicits._
     val alpha = 2.0 / 11.0
     val beta = 1.0 - alpha
-    val out = src.groupByKey(_.user_id)
+    src.groupByKey(_.user_id)
       .flatMapGroupsWithState[EmaState, EmaOut](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (user: Long, it: Iterator[PatternStream.Ev],
@@ -526,7 +541,6 @@ object StreamingQueries {
               state.getCurrentWatermarkMs() + 1L))
           outRows.iterator
       }
-    runToTable(spark, out.toDF(), "graft_s9_sink", "append")
   }
 
   /** #29b-streaming: Hawkes self-exciting intensity on a live stream
@@ -623,12 +637,22 @@ object StreamingQueries {
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"), unix_micros(col("ts")).as("ts_us"), col("ts"))
       .as[PatternStream.Ev]
+    runToTable(spark, countWindowTransform(src).toDF(), "graft_s10_sink",
+      "append")
+  }
+
+  /** The s10 fold, exposed so the split-invariance spec can drive it. */
+  private[graft] def countWindowTransform(
+      src: org.apache.spark.sql.Dataset[PatternStream.Ev])
+      : org.apache.spark.sql.Dataset[CwOut] = {
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    import src.sparkSession.implicits._
     val winSize = 10
     def cents(v: Double): Long =
       java.math.BigDecimal.valueOf(v)
         .setScale(2, java.math.RoundingMode.HALF_UP)
         .movePointRight(2).longValueExact()
-    val out = src.groupByKey(_.user_id)
+    src.groupByKey(_.user_id)
       .flatMapGroupsWithState[CwState, CwOut](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (user: Long, it: Iterator[PatternStream.Ev],
@@ -662,7 +686,6 @@ object StreamingQueries {
               state.getCurrentWatermarkMs() + 1L))
           outRows.iterator
       }
-    runToTable(spark, out.toDF(), "graft_s10_sink", "append")
   }
 
   /** #20c-streaming: z-score anomaly detection on a live stream —
@@ -683,11 +706,20 @@ object StreamingQueries {
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"), unix_micros(col("ts")).as("ts_us"), col("ts"))
       .as[PatternStream.Ev]
+    runToTable(spark, anomalyTransform(src).toDF(), "graft_s11_sink", "append")
+  }
+
+  /** The s11 fold, exposed so the split-invariance spec can drive it. */
+  private[graft] def anomalyTransform(
+      src: org.apache.spark.sql.Dataset[PatternStream.Ev])
+      : org.apache.spark.sql.Dataset[AnOut] = {
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    import src.sparkSession.implicits._
     def cents(v: Double): Long =
       java.math.BigDecimal.valueOf(v)
         .setScale(2, java.math.RoundingMode.HALF_UP)
         .movePointRight(2).longValueExact()
-    val out = src.groupByKey(_.user_id)
+    src.groupByKey(_.user_id)
       .flatMapGroupsWithState[AnState, AnOut](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (user: Long, it: Iterator[PatternStream.Ev],
@@ -723,7 +755,6 @@ object StreamingQueries {
               state.getCurrentWatermarkMs() + 1L))
           outRows.iterator
       }
-    runToTable(spark, out.toDF(), "graft_s11_sink", "append")
   }
 
   /** #7d-streaming: as-of (SCD) enrichment on a live stream — the one
@@ -1549,9 +1580,20 @@ object StreamingQueries {
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"), unix_micros(col("ts")).as("ts_us"), col("ts"))
       .as[PatternStream.Ev]
+    runToTable(spark, rateLimitTransform(src).toDF()
+      .select(col("event_id"), col("user_id"), col("win_start"),
+        col("admitted")), "graft_s21_sink", "append")
+  }
+
+  /** The s21 fold, exposed so the split-invariance spec can drive it. */
+  private[graft] def rateLimitTransform(
+      src: org.apache.spark.sql.Dataset[PatternStream.Ev])
+      : org.apache.spark.sql.Dataset[RlOut] = {
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    import src.sparkSession.implicits._
     val maxPerWindow = 2
     val hourUs = 3600L * 1000000L
-    val out = src.groupByKey(_.user_id)
+    src.groupByKey(_.user_id)
       .flatMapGroupsWithState[RlState, RlOut](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (user: Long, it: Iterator[PatternStream.Ev],
@@ -1576,9 +1618,6 @@ object StreamingQueries {
               state.getCurrentWatermarkMs() + 1L))
           outRows.iterator
       }
-    runToTable(spark, out.toDF()
-      .select(col("event_id"), col("user_id"), col("win_start"),
-        col("admitted")), "graft_s21_sink", "append")
   }
 
   /** #52-streaming: circuit-breaker replay per connector on a live
@@ -1602,11 +1641,22 @@ object StreamingQueries {
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"), unix_micros(col("ts")).as("ts_us"), col("ts"))
       .as[PatternStream.Ev]
+    runToTable(spark, breakerTransform(src).toDF()
+      .select(col("connector"), col("event_id"), col("decision"),
+        col("state_after")), "graft_s22_sink", "append")
+  }
+
+  /** The s22 fold, exposed so the split-invariance spec can drive it. */
+  private[graft] def breakerTransform(
+      src: org.apache.spark.sql.Dataset[PatternStream.Ev])
+      : org.apache.spark.sql.Dataset[BkOut] = {
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    import src.sparkSession.implicits._
     val threshold = 3
     val timeoutUs = 3600L * 1000000L
     import graft.functions.BreakerReplayUtil
     val decisions = Array("sent", "rejected", "probe")
-    val out = src.groupByKey(_.event_type)
+    src.groupByKey(_.event_type)
       .flatMapGroupsWithState[BkStreamState, BkOut](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (connector: String, it: Iterator[PatternStream.Ev],
@@ -1634,9 +1684,6 @@ object StreamingQueries {
               state.getCurrentWatermarkMs() + 1L))
           outRows.iterator
       }
-    runToTable(spark, out.toDF()
-      .select(col("connector"), col("event_id"), col("decision"),
-        col("state_after")), "graft_s22_sink", "append")
   }
 
   def streamDisjunction(spark: SparkSession, dir: String): DataFrame = {

@@ -392,6 +392,97 @@ class StreamingSpec extends SparkSpec {
       s"missing=${(expected -- got).take(3)} extra=${(got -- expected).take(3)}")
   }
 
+  test("closed streams read a directory-shaped events table") {
+    import graft.streaming.StreamingQueries.streamPattern
+    // a multi-part write stages as its part files; linking the
+    // directory itself would feed the stream only the sentinel
+    val single = streamPattern(spark, sf).collect().map(_.toString).sorted.toSeq
+    val dir = java.nio.file.Files.createTempDirectory("graft_partdir_").toString
+    spark.read.parquet(s"$sf/events.parquet").repartition(4)
+      .write.parquet(s"$dir/events.parquet")
+    val parts = new java.io.File(s"$dir/events.parquet").listFiles()
+      .count(_.getName.endsWith(".parquet"))
+    assert(parts == 4, s"expected 4 part files, got $parts")
+    val parted = streamPattern(spark, dir).collect().map(_.toString).sorted.toSeq
+    assert(single.nonEmpty, "the single-file run found no sequence")
+    assert(parted == single,
+      s"missing=${single.diff(parted).take(3)} extra=${parted.diff(single).take(3)}")
+  }
+
+  // The as-of fixture as a table over the other buffered folds: 120
+  // events over 5 users, signups every 7th and purchases every 3rd id,
+  // one minute apart; values and the 7-way file split drawn from the
+  // same seeded generator. Each fold's output over the split delivery
+  // must equal its output over one file holding every event.
+  private def fuzzEvents(rnd: scala.util.Random)
+      : Seq[(Long, Long, String, Long, Double)] = {
+    val base = 1704067200L * 1000000L
+    (1 to 120).map { i =>
+      val et =
+        if (i % 7 == 0) "signup" else if (i % 3 == 0) "purchase" else "click"
+      (i.toLong, (i % 5).toLong + 1, et, base + i * 60000000L,
+        rnd.nextInt(1000) / 10.0)
+    }
+  }
+
+  /** Runs `transform` over `files` (plus a closing sentinel file),
+    * delivered one file per trigger, and returns its rows as sorted
+    * strings with the count of micro-batches that carried input.
+    */
+  private def runFuzz(name: String,
+      files: Seq[Seq[(Long, Long, String, Long, Double)]],
+      transform: org.apache.spark.sql.Dataset[graft.streaming.PatternStream.Ev] =>
+        org.apache.spark.sql.DataFrame): (Seq[String], Int) = {
+    import spark.implicits._
+    val base = 1704067200L * 1000000L
+    val dir = java.nio.file.Files.createTempDirectory("graft_splitfuzz_").toString
+    val sentinel = (9999L, 0L, "__sentinel", base + 259200L * 1000000L, 0.0)
+    (files :+ Seq(sentinel)).zipWithIndex.foreach { case (evs, b) =>
+      evs.toDF("event_id", "user_id", "event_type", "us", "value")
+        .withColumn("ts", timestamp_micros(col("us")))
+        .coalesce(1).write.parquet(f"$dir/b=$b%02d")
+    }
+    val src = spark.readStream.schema(spark.read.parquet(s"$dir/b=00").schema)
+      .option("maxFilesPerTrigger", "1").parquet(s"$dir/b=*")
+      .withWatermark("ts", "3 hours")
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        col("value"), col("us").as("ts_us"), col("ts"))
+      .as[graft.streaming.PatternStream.Ev]
+    val q = transform(src).writeStream.format("memory")
+      .queryName(name).outputMode("append").start()
+    val batches =
+      try { q.processAllAvailable(); q.recentProgress.count(_.numInputRows > 0) }
+      finally q.stop()
+    (spark.table(name).collect().map(_.toString).toSeq.sorted, batches)
+  }
+
+  {
+    import graft.streaming.StreamingQueries._
+    Seq[(String, String, org.apache.spark.sql.Dataset[graft.streaming.PatternStream.Ev] =>
+        org.apache.spark.sql.DataFrame)](
+      ("s9", "EMA", src => emaTransform(src).toDF()),
+      ("s32", "Hawkes intensity",
+        src => hawkesTransform(src, 0.001, 0.002, 0.0005).toDF()),
+      ("s10", "count windows", src => countWindowTransform(src).toDF()),
+      ("s11", "anomaly scores", src => anomalyTransform(src).toDF()),
+      ("s21", "rate limit", src => rateLimitTransform(src).toDF()),
+      ("s22", "circuit breaker", src => breakerTransform(src).toDF()),
+      ("s2", "generic NFA sequence", src => sequenceTransform(src.toDF()))
+    ).foreach { case (id, what, transform) =>
+      test(s"$id streaming $what is micro-batch-split invariant (fuzz)") {
+        val rnd = new scala.util.Random(7)
+        val events = fuzzEvents(rnd)
+        val split = events.groupBy(_ => rnd.nextInt(7)).toSeq.sortBy(_._1).map(_._2)
+        val (one, _) = runFuzz(s"graft_fuzz_${id}_one", Seq(events), transform)
+        val (got, batches) = runFuzz(s"graft_fuzz_${id}_split", split, transform)
+        assert(one.nonEmpty, s"$id emitted nothing on the single-file run")
+        assert(batches >= 5, "expected a genuinely multi-batch run")
+        assert(got == one,
+          s"missing=${one.diff(got).take(3)} extra=${got.diff(one).take(3)}")
+      }
+    }
+  }
+
   test("streaming NFA evicts state for quiet keys once watermark passes") {
     import spark.implicits._
     import graft.streaming.PatternStream._
