@@ -1074,7 +1074,8 @@ object TextQueries {
     // uni+bigram log-likelihood ratio vs a target domain (sources
     // 0–4, t7's head stratum). Counts/totals exact integers both
     // sides; the one ln() is rounded 9dp and DECIMAL-summed, so the
-    // gate never depends on float summation order ---
+    // gate never depends on float summation order, and the sum rounds
+    // to 6dp BEFORE its cast to DOUBLE (exact on a halfway sum) ---
     "t13_dsir" -> QueryDef.of(
       s"""WITH w AS (
          |  SELECT doc_id,
@@ -1105,7 +1106,7 @@ object TextQueries {
          |    ), 9) AS DECIMAL(18,9)) AS lr
          |  FROM c, t)
          |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-         |  round(CAST(SUM(lr) AS DOUBLE), 6) AS dsir_weight,
+         |  CAST(round(SUM(lr), 6) AS DOUBLE) AS dsir_weight,
          |  round(CAST(SUM(lr) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS avg_lr
          |FROM b JOIN l USING (bucket)
          |GROUP BY doc_id""".stripMargin) {

@@ -9,10 +9,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * Count windows cannot ride Spark's time-window aggregation (the
   * window id is a per-key event COUNTER, not a timestamp bucket), so
-  * the membership decision lives in `flatMapGroupsWithState`:
-  * watermark-finalized rows fold in `ord` (event_id) order through
-  * per-window accumulators; a window emits the moment its Nth event
-  * folds in. The accumulators — (count, sum, min, max) per requested
+  * the membership decision lives in `flatMapGroupsWithState`: rows
+  * finalized by a [[WatermarkFold]] fold in `ord` (event_id) order
+  * through per-window accumulators; a window emits the moment its
+  * Nth event folds in. The accumulators — (count, sum, min, max) per requested
   * aggregate — are O(#aggs) per key; the not-yet-final buffer is
   * bounded by the watermark delay. State is a stable case class, so a
   * checkpointed query resumes across restarts mid-window (the
@@ -38,6 +38,8 @@ object CountWindowStream {
   final case class St(winId: Long, cnt: Int, sums: Seq[Double],
       mins: Seq[Double], maxs: Seq[Double], buf: List[In])
 
+  private val byOrd = WatermarkFold.byTime[In, Long](_.ts_us, _.ord)
+
   def run(ds: Dataset[In], n: Int, kinds: Seq[(String, Int)])(
       implicit spark: SparkSession): Dataset[Out] = {
     import spark.implicits._
@@ -50,15 +52,12 @@ object CountWindowStream {
       .flatMapGroupsWithState[St, Out](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (key: String, it: Iterator[In], state: GroupState[St]) =>
-          var st = state.getOption.getOrElse(St(0L, 0, zeros, inf, ninf, Nil))
-          var buf = st.buf
-          if (!state.hasTimedOut) buf = buf ++ it.filter(_.live)
-          val wm = state.getCurrentWatermarkMs() * 1000L
-          val (safe, waiting) = buf.partition(_.ts_us <= wm)
+          val st = state.getOption.getOrElse(St(0L, 0, zeros, inf, ninf, Nil))
+          val (ready, waiting) = byOrd.release(state, st.buf, it.filter(_.live))
           var (winId, cnt) = (st.winId, st.cnt)
           var (sums, mins, maxs) = (st.sums, st.mins, st.maxs)
           val out = scala.collection.mutable.ArrayBuffer.empty[Out]
-          for (r <- safe.sortBy(_.ord)) {
+          for (r <- ready) {
             sums = sums.zip(r.vals).map { case (a, v) => a + v }
             mins = mins.zip(r.vals).map { case (a, v) => math.min(a, v) }
             maxs = maxs.zip(r.vals).map { case (a, v) => math.max(a, v) }
@@ -76,11 +75,7 @@ object CountWindowStream {
               winId += 1; cnt = 0; sums = zeros; mins = inf; maxs = ninf
             }
           }
-          state.update(St(winId, cnt, sums, mins, maxs, waiting))
-          if (waiting.nonEmpty)
-            state.setTimeoutTimestamp(math.max(
-              (waiting.map(_.ts_us).min / 1000L) + 1L,
-              state.getCurrentWatermarkMs() + 1L))
+          byOrd.save(state, St(winId, cnt, sums, mins, maxs, waiting), waiting)
           out.iterator
       }
   }

@@ -19,7 +19,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * window-count-expressible in SQL and therefore hash-oracleable,
   * unlike the fit-once batch surrogate.
   *
-  * Cross-batch determinism uses the detectGeneric recipe: arriving
+  * Cross-batch determinism comes from [[WatermarkFold]]: arriving
   * events buffer in state and are applied in `event_id` order only
   * once the watermark passes their event time, with an event-time
   * timer re-firing the group when no further rows arrive for the key.
@@ -44,6 +44,7 @@ object ForecastStream {
       cnt: Long, depth: Int)
 
   private final val Sep = "\u0001"
+  private val byEventId = WatermarkFold.byTime[FEv, Long](_.ts_us, _.event_id)
 
   def onlineScores(events: Dataset[FEv])(
       implicit spark: SparkSession): Dataset[FOut] = {
@@ -63,14 +64,10 @@ object ForecastStream {
           val prev = state.getOption.getOrElse(FState(Map.empty, Nil, Nil))
           var counts = prev.counts
           var recent = prev.recent
-          var buf = prev.buf
-          if (!state.hasTimedOut) buf = buf ++ it
-          val wm = state.getCurrentWatermarkMs() * 1000L
-          // apply the finalized prefix in global event_id order
-          val (safe, waiting) = buf.partition(_.ts_us <= wm)
-          buf = waiting
+          // apply the finalized events in global event_id order
+          val (ready, buf) = byEventId.release(state, prev.buf, it)
           val out = scala.collection.mutable.ArrayBuffer.empty[FOut]
-          for (ev <- safe.sortBy(_.event_id)) {
+          for (ev <- ready) {
             val ctx1 = recent.headOption
             val ctx2 =
               if (recent.size >= 2) Some(recent(1) + ">" + recent(0)) else None
@@ -96,17 +93,10 @@ object ForecastStream {
             }
             recent = (ev.event_type :: recent).take(2)
           }
+          // a drained buffer needs no timer (the model just waits for
+          // the key's next event)
           if (counts.isEmpty && recent.isEmpty && buf.isEmpty) state.remove()
-          else {
-            state.update(FState(counts, recent, buf))
-            // re-fire once the watermark passes the oldest buffered
-            // event; a drained buffer needs no timer (the model just
-            // waits for the key's next event)
-            if (buf.nonEmpty)
-              state.setTimeoutTimestamp(math.max(
-                buf.map(_.ts_us).min / 1000L + 1L,
-                state.getCurrentWatermarkMs() + 1L))
-          }
+          else byEventId.save(state, FState(counts, recent, buf), buf)
           out.iterator
       }
   }

@@ -66,6 +66,8 @@ object PatternStream {
   final case class GMatch(key: String, ids: Seq[Long],
       payloads: Seq[Map[String, String]], span_us: Long)
 
+  private val byEventId = WatermarkFold.byTime[GEv, Long](_.ts_us, _.event_id)
+
   /** Cross-step predicate: (incoming event's payload, payloads of the
     * steps matched so far, aligned by step index) => admit. Must be
     * serializable (closures over plain data only).
@@ -136,13 +138,13 @@ object PatternStream {
     * emission is watermark-gated).
     *
     * Micro-batch-split invariance (the same guarantee detectAbsence
-    * carries): arriving events are BUFFERED in state and applied in
-    * `event_id` order only once the watermark passes their event
-    * time — at that point no earlier-timed event can still arrive,
-    * so the NFA sees one deterministic order regardless of how the
-    * source splits micro-batches. The cost is that matches surface
-    * one watermark advance after their closing event (a closed/test
-    * stream appends a far-future sentinel to flush).
+    * carries): arriving events pass through a [[WatermarkFold]] —
+    * buffered in state and applied in `event_id` order only once the
+    * watermark passes their event time — so the NFA sees one
+    * deterministic order regardless of how the source splits
+    * micro-batches. The cost is that matches surface one watermark
+    * advance after their closing event (a closed/test stream appends
+    * a far-future sentinel to flush).
     */
   def detectGeneric(
       events: Dataset[GEv],
@@ -179,7 +181,6 @@ object PatternStream {
           val prev = state.getOption.getOrElse(GState(Nil, Nil))
           var runs = prev.runs
           var pending = prev.pending
-          var buf = prev.buf
           val out = scala.collection.mutable.ArrayBuffer.empty[GMatch]
           def complete(nr: GRun, lastId: Long, spanUs: Long): Unit =
             if (withNegation)
@@ -207,15 +208,12 @@ object PatternStream {
                     scala.util.Try(v.toDouble).toOption).getOrElse(0.0)).toString)
           /** empty slot for a skipped star step (n_b = 0, NULL-ish ids) */
           val kSkip: Map[String, String] = Map(KCount -> "0")
-          if (!state.hasTimedOut)
-            buf = buf ++ it.filter(_.mask != 0L)
-          val wmNowUs = state.getCurrentWatermarkMs() * 1000L
-          // apply the finalized prefix in global event_id order; later
+          // apply the finalized events in global event_id order; later
           // micro-batches can no longer deliver anything this old
-          val (safe, waiting) = buf.partition(_.ts_us <= wmNowUs)
-          buf = waiting
+          val (ready, buf) = byEventId.release(state, prev.buf,
+            it.filter(_.mask != 0L))
           locally {
-            for (ev <- safe.sortBy(_.event_id)) {
+            for (ev <- ready) {
               runs = runs.filter(r => ev.ts_us - r.firstTsUs <= withinUs)
               if (withNegation && ((ev.mask >> nSteps) & 1L) == 1L)
                 pending = pending.filterNot(p =>
@@ -288,7 +286,7 @@ object PatternStream {
               if (runs.size > maxRuns) runs = runs.take(maxRuns)
             }
           }
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
+          val wmUs = WatermarkFold.watermarkUs(state)
           if (wmUs > 0L) {
             runs = runs.filter(r => r.firstTsUs + withinUs >= wmUs)
             val (done, held) = pending.partition(p =>
@@ -302,11 +300,9 @@ object PatternStream {
             state.update(GState(runs, pending, buf))
             // wake when the watermark passes the next run/negation
             // deadline OR the next buffered event's time
-            val nextDeadlineMs = ((runs.map(_.firstTsUs + withinUs) ++
+            WatermarkFold.rearm(state, ((runs.map(_.firstTsUs + withinUs) ++
               pending.map(_.firstTsUs + withinUs) ++
-              buf.map(_.ts_us)).min / 1000L) + 1L
-            state.setTimeoutTimestamp(math.max(nextDeadlineMs,
-              state.getCurrentWatermarkMs() + 1L))
+              buf.map(_.ts_us)).min / 1000L) + 1L)
           }
           out.iterator
       }
@@ -316,6 +312,7 @@ object PatternStream {
   final case class Buf(event_id: Long, ts_us: Long, isA: Boolean)
   final case class AbsenceState(pending: List[Run], buf: List[Buf])
   final case class Absence(user_id: Long, a_id: Long)
+  private val absenceFold = WatermarkFold.byTime[Buf, Long](_.ts_us, _.event_id)
 
   /** Streaming negation `A -> NOT(B) within d` (sase.rs
     * NegationInfo / timer.rs timeout semantics): pending A's are
@@ -325,11 +322,10 @@ object PatternStream {
     * reference's negation timers. Requires `withWatermark` on the
     * input's ts column.
     *
-    * Cross-batch order safety: arriving events are BUFFERED in state
-    * and only applied once the watermark passes their event time —
-    * at that point no earlier-timed event can still arrive, so
-    * processing the finalized prefix in `event_id` order is correct
-    * regardless of how the source splits micro-batches. An anchor is
+    * Cross-batch order safety: arriving events pass through a
+    * [[WatermarkFold]] — applied in `event_id` order only once the
+    * watermark passes their event time — so the result does not
+    * depend on how the source splits micro-batches. An anchor is
     * emitted only when its deadline falls behind the watermark: any
     * kill-event for it would have ts ≤ deadline < watermark and so is
     * either already applied or impossibly late.
@@ -351,24 +347,21 @@ object PatternStream {
         (user: Long, it: Iterator[Ev], state: GroupState[AbsenceState]) =>
           val prev = state.getOption.getOrElse(AbsenceState(Nil, Nil))
           var pending = prev.pending
-          var buf = prev.buf
           val out = scala.collection.mutable.ArrayBuffer.empty[Absence]
-          if (!state.hasTimedOut)
-            buf = buf ++ it.flatMap { ev =>
+          // apply the finalized events in global arrival order
+          val (ready, buf) = absenceFold.release(state, prev.buf,
+            it.flatMap { ev =>
               if (ev.event_type == aType) Some(Buf(ev.event_id, ev.ts_us, isA = true))
               else if (ev.event_type == bType) Some(Buf(ev.event_id, ev.ts_us, isA = false))
               else None
-            }
-          val wm = state.getCurrentWatermarkMs() * 1000L
-          // apply the finalized prefix in global arrival order
-          val (safe, waiting) = buf.partition(_.ts_us <= wm)
-          buf = waiting
-          for (e <- safe.sortBy(_.event_id)) {
+            })
+          for (e <- ready) {
             if (e.isA) pending = Run(0, e.ts_us, List(e.event_id)) :: pending
             else pending = pending.filterNot(r =>
               e.event_id > r.ids.head && e.ts_us - r.firstTsUs <= withinUs)
           }
           // watermark passed a deadline → no B can retract it anymore
+          val wm = WatermarkFold.watermarkUs(state)
           val (done, live) = pending.partition(r => r.firstTsUs + withinUs < wm)
           done.foreach(r => out += Absence(user, r.ids.head))
           pending = live
@@ -377,10 +370,8 @@ object PatternStream {
             state.update(AbsenceState(pending, buf))
             // wake when the watermark passes the next deadline OR the
             // next buffered event's time, whichever is sooner
-            val nextUs = (pending.map(_.firstTsUs + withinUs) ++
-              buf.map(_.ts_us)).min
-            state.setTimeoutTimestamp(math.max((nextUs / 1000L) + 1L,
-              state.getCurrentWatermarkMs() + 1L))
+            WatermarkFold.rearm(state, ((pending.map(_.firstTsUs + withinUs) ++
+              buf.map(_.ts_us)).min / 1000L) + 1L)
           }
           out.iterator
       }
@@ -445,16 +436,15 @@ object PatternStream {
           }
           // timer fired OR batch done: drop every run the watermark has
           // already expired — no future in-watermark event can advance it
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
+          val wmUs = WatermarkFold.watermarkUs(state)
           if (wmUs > 0L) runs = runs.filter(r => r.firstTsUs + withinUs >= wmUs)
           if (runs.isEmpty) state.remove()
           else {
             state.update(NfaState(runs))
             // wake when the earliest live run's deadline passes the
             // watermark, so quiet keys still get cleaned up
-            val nextDeadlineMs = (runs.map(_.firstTsUs + withinUs).min / 1000L) + 1L
-            state.setTimeoutTimestamp(math.max(nextDeadlineMs,
-              state.getCurrentWatermarkMs() + 1L))
+            WatermarkFold.rearm(state,
+              (runs.map(_.firstTsUs + withinUs).min / 1000L) + 1L)
           }
           out.iterator
       }
@@ -511,16 +501,14 @@ object PatternStream {
                 anchors = Run(0, ev.ts_us, List(ev.event_id)) :: anchors
             }
           }
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
+          val wmUs = WatermarkFold.watermarkUs(state)
           if (wmUs > 0L)
             anchors = anchors.filter(a => a.firstTsUs + withinUs >= wmUs)
           if (anchors.isEmpty) state.remove()
           else {
             state.update(SharedState(anchors))
-            val nextDeadlineMs =
-              (anchors.map(_.firstTsUs + withinUs).min / 1000L) + 1L
-            state.setTimeoutTimestamp(math.max(nextDeadlineMs,
-              state.getCurrentWatermarkMs() + 1L))
+            WatermarkFold.rearm(state,
+              (anchors.map(_.firstTsUs + withinUs).min / 1000L) + 1L)
           }
           out.iterator
       }

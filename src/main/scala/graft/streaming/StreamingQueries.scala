@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured Streaming surface (SURVEY §2 #31–34).
   *
@@ -90,40 +91,41 @@ object StreamingQueries {
       : org.apache.spark.sql.types.StructType =
     schemaCache.getOrElseUpdate(path, spark.read.parquet(path).schema)
 
+  /** Links the table at `file` into the staging directory `dir`: a
+    * single file as itself, a directory-shaped table (a multi-part
+    * write, e.g. a ScaleBench-staged corpus) as each of its parquet
+    * part FILES — readStream.parquet does not recurse into a directory
+    * symlink, so linking the directory itself silently feeds the
+    * stream ZERO rows.
+    */
+  private def linkParts(file: String, dir: java.nio.file.Path): Unit = {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val src = Paths.get(file).toAbsolutePath
+    val parts =
+      if (!Files.isDirectory(src)) Seq(src)
+      // Files.list holds a directory fd until closed — materialize
+      // under Using so the caches don't leak one fd per staged table
+      else scala.util.Using.resource(Files.list(src)) { s =>
+        s.iterator().asScala
+          .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+      }
+    require(parts.nonEmpty, s"no parquet part files under $src")
+    parts.foreach(p => Files.createSymbolicLink(dir.resolve(p.getFileName), p))
+  }
+
   /** The file streaming source requires a directory; the test tables
-    * are single files. Stage a temp dir holding a symlink — in
-    * production the source would already be a directory/object-store
-    * prefix.
+    * are single files. Stage a temp dir of symlinks — in production
+    * the source would already be a directory/object-store prefix.
     */
   private def streamDir(file: String): String =
     dirCache.getOrElseUpdate(file, {
-      import java.nio.file.{Files, Paths}
-      import scala.jdk.CollectionConverters._
-      val src = Paths.get(file).toAbsolutePath
-      val dir = Files.createTempDirectory("graft_stream_")
-      if (Files.isDirectory(src)) {
-        // directory-shaped table (a multi-part write, e.g. a
-        // ScaleBench-staged corpus): symlink each part FILE —
-        // readStream.parquet does not recurse into a directory
-        // symlink, so linking the directory itself silently feeds
-        // the stream ZERO rows
-        // Files.list holds a directory fd until closed — materialize
-        // under Using so the cache doesn't leak one fd per staged table
-        val parts = scala.util.Using.resource(Files.list(src)) { s =>
-          s.iterator().asScala
-            .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-        }
-        require(parts.nonEmpty, s"no parquet part files under $src")
-        parts.foreach(p =>
-          Files.createSymbolicLink(dir.resolve(p.getFileName), p))
-      } else {
-        Files.createSymbolicLink(dir.resolve(src.getFileName), src)
-        ()
-      }
+      val dir = java.nio.file.Files.createTempDirectory("graft_stream_")
+      linkParts(file, dir)
       dir.toString
     })
 
-  /** Stage a CLOSED bounded stream: the source file plus one sentinel
+  /** Stage a CLOSED bounded stream: the source table plus one sentinel
     * row 2 hours past the max event time. The end-of-stream watermark
     * then passes every deadline / session gap, so append-mode state
     * flushes completely and the bounded streaming run equals the batch
@@ -138,10 +140,8 @@ object StreamingQueries {
     // its OWN staged dir (not streamDir's memoized one — appending the
     // sentinel there would leak it into the open-stream queries)
     closedDirCache.getOrElseUpdate(file, {
-      import java.nio.file.{Files, Paths}
-      val src = Paths.get(file).toAbsolutePath
-      val dir = Files.createTempDirectory("graft_cstream_")
-      Files.createSymbolicLink(dir.resolve(src.getFileName), src)
+      val dir = java.nio.file.Files.createTempDirectory("graft_cstream_")
+      linkParts(file, dir)
       // The sentinel must be written in the SAME physical ts type as
       // the source file so the staged dir's files share one schema.
       // Two staged encodings exist (see Tables.normalizeTs): ns-epoch
@@ -178,6 +178,32 @@ object StreamingQueries {
       dir.toString
     })
 
+  /** The closed event stream of `dir` ([[closedStreamDir]]),
+    * normalized and watermarked on `ts` with `delay`.
+    */
+  private def closedEvents(spark: SparkSession, dir: String,
+      delay: String = "1 second"): DataFrame = {
+    val path = s"$dir/events.parquet"
+    graft.Tables.normalizeEvents(spark.readStream.schema(schemaOf(spark, path))
+      .parquet(closedStreamDir(spark, path))).withWatermark("ts", delay)
+  }
+
+  /** A watermarked event frame as the typed rows the stateful folds
+    * take (`ts` rides along: event-time timeouts need it).
+    */
+  private def asEv(events: DataFrame): Dataset[PatternStream.Ev] = {
+    import events.sparkSession.implicits._
+    events.select(col("event_id"), col("user_id"), col("event_type"),
+      col("value"), unix_micros(col("ts")).as("ts_us"), col("ts"))
+      .as[PatternStream.Ev]
+  }
+
+  /** The shuffle-partition cap of every stream run here, so at most
+    * this many state stores commit per micro-batch (see
+    * [[runToTable]]; 1, 2 and 4 measured alike).
+    */
+  private final val StreamStateParts = 4
+
   private def runToTable(
       spark: SparkSession, streamed: DataFrame, name: String,
       mode: String): DataFrame = {
@@ -192,10 +218,9 @@ object StreamingQueries {
     // plan built concurrently in this session during that window would
     // capture the capped value. The test harness runs queries
     // sequentially in one thread, which is the supported mode here.
-    val cap = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "4").toInt
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if (prev.toInt > cap)
-      spark.conf.set("spark.sql.shuffle.partitions", cap.toString)
+    if (prev.toInt > StreamStateParts)
+      spark.conf.set("spark.sql.shuffle.partitions", StreamStateParts.toString)
     val q =
       try streamed.writeStream
         .outputMode(mode)
@@ -239,12 +264,7 @@ object StreamingQueries {
     * so every window flushes. Shares batch w2's oracle.
     */
   def streamSliding(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/events.parquet"
-    val schema = schemaOf(spark, path)
-    val src = graft.Tables.normalizeEvents(
-      spark.readStream.schema(schema).parquet(closedStreamDir(spark, path)))
-    val agg = src
-      .withWatermark("ts", "1 second")
+    val agg = closedEvents(spark, dir)
       .groupBy(col("event_type"),
         window(col("ts"), "1 hour", "30 minutes"))
       .agg(
@@ -293,12 +313,7 @@ object StreamingQueries {
     * the batch w3 session query and shares its oracle.
     */
   def streamSession(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/events.parquet"
-    val schema = schemaOf(spark, path)
-    val src = graft.Tables.normalizeEvents(
-      spark.readStream.schema(schema).parquet(closedStreamDir(spark, path)))
-    val agg = src
-      .withWatermark("ts", "1 second")
+    val agg = closedEvents(spark, dir)
       .groupBy(col("user_id"), session_window(col("ts"), "10 minutes").as("w"))
       .agg(
         count(lit(1)).as("n"),
@@ -314,23 +329,14 @@ object StreamingQueries {
     * result equals the batch anti-join and shares its oracle.
     */
   def streamNegation(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import PatternStream._
-    val path = s"$dir/events.parquet"
-    val schema = schemaOf(spark, path)
-    val src = graft.Tables.normalizeEvents(
-      spark.readStream.schema(schema).parquet(closedStreamDir(spark, path)))
-      .withWatermark("ts", "1 second")
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        col("value"), unix_micros(col("ts")).as("ts_us"), col("ts"))
-      .as[Ev]
-    val absences = detectAbsence(src, "purchase", "error",
+    val absences = PatternStream.detectAbsence(
+      asEv(closedEvents(spark, dir)), "purchase", "error",
       withinUs = 900L * 1000000L)(spark)
     runToTable(spark, absences.toDF(), "graft_s4_sink", "append")
   }
 
   /** #32 streaming SASE sequence detection — the generic buffered NFA
-    * (split-invariant finalized-prefix ordering, like every stateful
+    * (split-invariant [[WatermarkFold]] ordering, like every stateful
     * streaming query here); matches the batch p1_seq2 join's oracle.
     * The lightweight [[PatternStream.detect]] (immediate arrival-order
     * processing) remains the low-latency primitive for in-order
@@ -357,31 +363,20 @@ object StreamingQueries {
     */
   def streamMultiPatternWith(spark: SparkSession, dir: String,
       followers: Map[String, String], sink: String): DataFrame = {
-    import spark.implicits._
-    import PatternStream._
     val path = s"$dir/events.parquet"
-    val schema = schemaOf(spark, path)
-    val src = graft.Tables.normalizeEvents(
-      spark.readStream.schema(schema).parquet(streamDir(path)))
-      .withWatermark("ts", "1 hour")
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        col("value"), unix_micros(col("ts")).as("ts_us"), col("ts"))
-      .as[Ev]
-    val out = detectShared(src, "signup", followers,
+    val src = asEv(graft.Tables.normalizeEvents(
+      spark.readStream.schema(schemaOf(spark, path)).parquet(streamDir(path)))
+      .withWatermark("ts", "1 hour"))
+    val out = PatternStream.detectShared(src, "signup", followers,
       withinUs = 1800L * 1000000L)(spark)
     runToTable(spark, out.toDF()
       .select(col("pattern"), col("user_id"), col("a_id"), col("b_id"),
         col("span_us")), sink, "append")
   }
 
-  def streamPattern(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/events.parquet"
-    val schema = schemaOf(spark, path)
-    val src = graft.Tables.normalizeEvents(
-      spark.readStream.schema(schema).parquet(closedStreamDir(spark, path)))
-      .withWatermark("ts", "1 hour")
-    runToTable(spark, sequenceTransform(src), "graft_s2_sink", "append")
-  }
+  def streamPattern(spark: SparkSession, dir: String): DataFrame =
+    runToTable(spark, sequenceTransform(closedEvents(spark, dir, "1 hour")),
+      "graft_s2_sink", "append")
 
   /** The s2 signup → purchase sequence over a watermarked event frame,
     * exposed so the split-invariance spec can drive it.
@@ -420,15 +415,10 @@ object StreamingQueries {
   def streamKleene(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import PatternStream._
-    val path = s"$dir/events.parquet"
-    val schema = schemaOf(spark, path)
     // closed stream: detectGeneric applies events once the watermark
     // finalizes them (split-invariant ordering), so the bounded run
     // needs the far-future sentinel to flush the tail
-    val src = graft.Tables.normalizeEvents(
-      spark.readStream.schema(schema).parquet(closedStreamDir(spark, path)))
-      .withWatermark("ts", "1 hour")
-    val gev = src.select(
+    val gev = closedEvents(spark, dir, "1 hour").select(
       col("event_id"),
       col("user_id").cast("string").as("key"),
       unix_micros(col("ts")).as("ts_us"),
@@ -482,7 +472,7 @@ object StreamingQueries {
 
   /** #19-streaming: per-event running EMA on a live stream
     * (aggregation.rs ema over unbounded streams). State = the running
-    * (ema, n) per key plus the finalized-prefix buffer — events fold
+    * (ema, n) per key plus the [[WatermarkFold]] buffer — events fold
     * in event_id order once the watermark passes them, so the
     * sequential recursion is deterministic under any micro-batch
     * split, and the emitted doubles reproduce the oracle's
@@ -491,25 +481,34 @@ object StreamingQueries {
     * long) forever — the inherent cost of a running per-key
     * aggregate, reference semantics included.
     */
-  def streamEma(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val path = s"$dir/events.parquet"
-    val schema = schemaOf(spark, path)
-    val src = graft.Tables.normalizeEvents(
-      spark.readStream.schema(schema).parquet(closedStreamDir(spark, path)))
-      .withWatermark("ts", "1 second")
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        col("value"), unix_micros(col("ts")).as("ts_us"), col("ts"))
-      .as[PatternStream.Ev]
-    runToTable(spark, emaTransform(src).toDF(), "graft_s9_sink", "append")
-  }
+  def streamEma(spark: SparkSession, dir: String): DataFrame =
+    runToTable(spark, emaTransform(asEv(closedEvents(spark, dir))).toDF(),
+      "graft_s9_sink", "append")
+
+  /** The [[WatermarkFold]] of the user-keyed folds below: event-time
+    * finalized, event_id ordered.
+    */
+  private val byEventId = WatermarkFold.byTime[EmaBuf, Long](_.ts_us, _.event_id)
+
+  /** The real events of a group (the closing sentinel only feeds the
+    * watermark), as buffer rows.
+    */
+  private def emaBufs(it: Iterator[PatternStream.Ev]): Iterator[EmaBuf] =
+    it.filter(_.event_type != "__sentinel")
+      .map(e => EmaBuf(e.event_id, e.ts_us, e.value))
+
+  /** Cents of the decimal(14,2)-rounded value (BigDecimal.valueOf =
+    * the same shortest-representation rounding Spark's double→decimal
+    * cast applies).
+    */
+  private def cents(v: Double): Long =
+    java.math.BigDecimal.valueOf(v)
+      .setScale(2, java.math.RoundingMode.HALF_UP)
+      .movePointRight(2).longValueExact()
 
   /** The s9 fold, exposed so the split-invariance spec can drive it. */
-  private[graft] def emaTransform(
-      src: org.apache.spark.sql.Dataset[PatternStream.Ev])
-      : org.apache.spark.sql.Dataset[EmaOut] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+  private[graft] def emaTransform(src: Dataset[PatternStream.Ev])
+      : Dataset[EmaOut] = {
     import src.sparkSession.implicits._
     val alpha = 2.0 / 11.0
     val beta = 1.0 - alpha
@@ -518,27 +517,16 @@ object StreamingQueries {
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (user: Long, it: Iterator[PatternStream.Ev],
          state: GroupState[EmaState]) =>
-          val prev = state.getOption.getOrElse(
-            EmaState(0.0, 0L, Nil: List[EmaBuf]))
+          val prev = state.getOption.getOrElse(EmaState(0.0, 0L, Nil))
           var ema = prev.ema
           var n = prev.n
-          var buf = prev.buf
-          if (!state.hasTimedOut)
-            buf = buf ++ it.filter(_.event_type != "__sentinel")
-              .map(e => EmaBuf(e.event_id, e.ts_us, e.value))
-          val wm = state.getCurrentWatermarkMs() * 1000L
-          val (safe, waiting) = buf.partition(_.ts_us <= wm)
-          buf = waiting
-          val outRows = safe.sortBy(_.event_id).map { e =>
+          val (ready, buf) = byEventId.release(state, prev.buf, emaBufs(it))
+          val outRows = ready.map { e =>
             ema = if (n == 0L) e.value else alpha * e.value + beta * ema
             n += 1
             EmaOut(user, e.event_id, ema)
           }
-          state.update(EmaState(ema, n, buf))
-          if (buf.nonEmpty)
-            state.setTimeoutTimestamp(math.max(
-              (buf.map(_.ts_us).min / 1000L) + 1L,
-              state.getCurrentWatermarkMs() + 1L))
+          byEventId.save(state, EmaState(ema, n, buf), buf)
           outRows.iterator
       }
   }
@@ -546,24 +534,21 @@ object StreamingQueries {
   /** #29b-streaming: Hawkes self-exciting intensity on a live stream
     * (pst/hawkes.rs runs exactly this recursion online). Per-key
     * state is the recursion's own O(1) carry — (last intensity, last
-    * event time) — plus the finalized-prefix buffer; events fold in
-    * event_id order once the watermark passes them (the streamEma
-    * recipe), and each step calls the SAME
-    * [[graft.functions.HawkesFoldUtil.step]] the batch fold uses, so
-    * the twins cannot diverge and s32 shares f4's recursive-CTE
-    * oracle verbatim. This is the 100 TB path for unbounded per-key
-    * histories that the batch collect_list fold deliberately is not.
+    * event time) — plus the [[WatermarkFold]] buffer; events fold in
+    * event_id order once the watermark passes them, and each step
+    * calls the SAME [[graft.functions.HawkesFoldUtil.step]] the batch
+    * fold uses, so the twins cannot diverge and s32 shares f4's
+    * recursive-CTE oracle verbatim. This is the 100 TB path for
+    * unbounded per-key histories that the batch collect_list fold
+    * deliberately is not.
     */
   /** The fMGWS transform behind [[streamHawkes]], exposed so the
     * checkpoint spec can run the SAME topology against a
     * parquet-source/checkpointed pipeline and prove the (li, lt)
     * carry survives a restart.
     */
-  def hawkesTransform(
-      src: org.apache.spark.sql.Dataset[PatternStream.Ev],
-      mu: Double, alpha: Double, beta: Double)
-      : org.apache.spark.sql.Dataset[HkOut] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+  def hawkesTransform(src: Dataset[PatternStream.Ev],
+      mu: Double, alpha: Double, beta: Double): Dataset[HkOut] = {
     import src.sparkSession.implicits._
     src.groupByKey(_.user_id)
       .flatMapGroupsWithState[HkState, HkOut](
@@ -573,40 +558,21 @@ object StreamingQueries {
           val prev = state.getOption.getOrElse(HkState(0.0, -1L, Nil))
           var li = prev.li
           var lt = prev.lt
-          var buf = prev.buf
-          if (!state.hasTimedOut)
-            buf = buf ++ it.filter(_.event_type != "__sentinel")
-              .map(e => EmaBuf(e.event_id, e.ts_us, e.value))
-          val wm = state.getCurrentWatermarkMs() * 1000L
-          val (safe, waiting) = buf.partition(_.ts_us <= wm)
-          buf = waiting
-          val outRows = safe.sortBy(_.event_id).map { e =>
+          val (ready, buf) = byEventId.release(state, prev.buf, emaBufs(it))
+          val outRows = ready.map { e =>
             li = graft.functions.HawkesFoldUtil.step(
               li, lt, e.ts_us, mu, alpha, beta)
             lt = e.ts_us
             HkOut(user, e.event_id, li)
           }
-          state.update(HkState(li, lt, buf))
-          if (buf.nonEmpty)
-            state.setTimeoutTimestamp(math.max(
-              (buf.map(_.ts_us).min / 1000L) + 1L,
-              state.getCurrentWatermarkMs() + 1L))
+          byEventId.save(state, HkState(li, lt, buf), buf)
           outRows.iterator
       }
   }
 
   def streamHawkes(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val path = s"$dir/events.parquet"
-    val schema = schemaOf(spark, path)
-    val src = graft.Tables.normalizeEvents(
-      spark.readStream.schema(schema).parquet(closedStreamDir(spark, path)))
-      .withWatermark("ts", "1 second")
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        col("value"), unix_micros(col("ts")).as("ts_us"), col("ts"))
-      .as[PatternStream.Ev]
     val (mu, alpha, beta) = (0.001, 0.002, 0.0005)
-    val out = hawkesTransform(src, mu, alpha, beta)
+    val out = hawkesTransform(asEv(closedEvents(spark, dir)), mu, alpha, beta)
     // identical post-projection to f4's batch select: boost from the
     // RAW intensity, then both columns rounded to 6
     val shaped = out.toDF().select(
@@ -620,38 +586,20 @@ object StreamingQueries {
   /** #11-streaming: count windows on a live stream (window.rs Count —
     * a window EMITS when it fills, which is why the batch twin's
     * oracle keeps only complete windows). State per key = the open
-    * window's running aggregates plus the finalized-prefix buffer;
-    * values accumulate as CENTS of the decimal(14,2)-rounded value
-    * (BigDecimal.valueOf = the same shortest-representation rounding
-    * Spark's double→decimal cast applies), so the emitted sum
-    * reproduces the oracle's decimal aggregation bit for bit.
+    * window's running aggregates plus the [[WatermarkFold]] buffer;
+    * values accumulate as [[cents]], so the emitted sum reproduces
+    * the oracle's decimal aggregation bit for bit.
     */
-  def streamCountWindow(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val path = s"$dir/events.parquet"
-    val schema = schemaOf(spark, path)
-    val src = graft.Tables.normalizeEvents(
-      spark.readStream.schema(schema).parquet(closedStreamDir(spark, path)))
-      .withWatermark("ts", "1 second")
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        col("value"), unix_micros(col("ts")).as("ts_us"), col("ts"))
-      .as[PatternStream.Ev]
-    runToTable(spark, countWindowTransform(src).toDF(), "graft_s10_sink",
-      "append")
-  }
+  def streamCountWindow(spark: SparkSession, dir: String): DataFrame =
+    runToTable(spark,
+      countWindowTransform(asEv(closedEvents(spark, dir))).toDF(),
+      "graft_s10_sink", "append")
 
   /** The s10 fold, exposed so the split-invariance spec can drive it. */
-  private[graft] def countWindowTransform(
-      src: org.apache.spark.sql.Dataset[PatternStream.Ev])
-      : org.apache.spark.sql.Dataset[CwOut] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+  private[graft] def countWindowTransform(src: Dataset[PatternStream.Ev])
+      : Dataset[CwOut] = {
     import src.sparkSession.implicits._
     val winSize = 10
-    def cents(v: Double): Long =
-      java.math.BigDecimal.valueOf(v)
-        .setScale(2, java.math.RoundingMode.HALF_UP)
-        .movePointRight(2).longValueExact()
     src.groupByKey(_.user_id)
       .flatMapGroupsWithState[CwState, CwOut](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
@@ -659,15 +607,9 @@ object StreamingQueries {
          state: GroupState[CwState]) =>
           var st = state.getOption.getOrElse(
             CwState(0L, 0, Long.MaxValue, Long.MinValue, 0L, Nil))
-          var buf = st.buf
-          if (!state.hasTimedOut)
-            buf = buf ++ it.filter(_.event_type != "__sentinel")
-              .map(e => EmaBuf(e.event_id, e.ts_us, e.value))
-          val wm = state.getCurrentWatermarkMs() * 1000L
-          val (safe, waiting) = buf.partition(_.ts_us <= wm)
-          buf = waiting
+          val (ready, buf) = byEventId.release(state, st.buf, emaBufs(it))
           val outRows = scala.collection.mutable.ArrayBuffer.empty[CwOut]
-          for (e <- safe.sortBy(_.event_id)) {
+          for (e <- ready) {
             st = CwState(st.winId, st.cnt + 1,
               math.min(st.firstId, e.event_id),
               math.max(st.lastId, e.event_id),
@@ -678,12 +620,7 @@ object StreamingQueries {
               st = CwState(st.winId + 1, 0, Long.MaxValue, Long.MinValue, 0L, Nil)
             }
           }
-          state.update(CwState(st.winId, st.cnt, st.firstId, st.lastId,
-            st.sumCents, buf))
-          if (buf.nonEmpty)
-            state.setTimeoutTimestamp(math.max(
-              (buf.map(_.ts_us).min / 1000L) + 1L,
-              state.getCurrentWatermarkMs() + 1L))
+          byEventId.save(state, st.copy(buf = buf), buf)
           outRows.iterator
       }
   }
@@ -695,30 +632,14 @@ object StreamingQueries {
     * batch double arithmetic term for term, so the result shares
     * w8's oracle bit for bit.
     */
-  def streamAnomaly(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val path = s"$dir/events.parquet"
-    val schema = schemaOf(spark, path)
-    val src = graft.Tables.normalizeEvents(
-      spark.readStream.schema(schema).parquet(closedStreamDir(spark, path)))
-      .withWatermark("ts", "1 second")
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        col("value"), unix_micros(col("ts")).as("ts_us"), col("ts"))
-      .as[PatternStream.Ev]
-    runToTable(spark, anomalyTransform(src).toDF(), "graft_s11_sink", "append")
-  }
+  def streamAnomaly(spark: SparkSession, dir: String): DataFrame =
+    runToTable(spark, anomalyTransform(asEv(closedEvents(spark, dir))).toDF(),
+      "graft_s11_sink", "append")
 
   /** The s11 fold, exposed so the split-invariance spec can drive it. */
-  private[graft] def anomalyTransform(
-      src: org.apache.spark.sql.Dataset[PatternStream.Ev])
-      : org.apache.spark.sql.Dataset[AnOut] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+  private[graft] def anomalyTransform(src: Dataset[PatternStream.Ev])
+      : Dataset[AnOut] = {
     import src.sparkSession.implicits._
-    def cents(v: Double): Long =
-      java.math.BigDecimal.valueOf(v)
-        .setScale(2, java.math.RoundingMode.HALF_UP)
-        .movePointRight(2).longValueExact()
     src.groupByKey(_.user_id)
       .flatMapGroupsWithState[AnState, AnOut](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
@@ -726,15 +647,9 @@ object StreamingQueries {
          state: GroupState[AnState]) =>
           val prev = state.getOption.getOrElse(AnState(Nil, Nil))
           var ring = prev.ring // newest first, ≤ 20 entries of cents
-          var buf = prev.buf
-          if (!state.hasTimedOut)
-            buf = buf ++ it.filter(_.event_type != "__sentinel")
-              .map(e => EmaBuf(e.event_id, e.ts_us, e.value))
-          val wm = state.getCurrentWatermarkMs() * 1000L
-          val (safe, waiting) = buf.partition(_.ts_us <= wm)
-          buf = waiting
+          val (ready, buf) = byEventId.release(state, prev.buf, emaBufs(it))
           val outRows = scala.collection.mutable.ArrayBuffer.empty[AnOut]
-          for (e <- safe.sortBy(_.event_id)) {
+          for (e <- ready) {
             val n = ring.size
             if (n >= 5) {
               val sx = ring.sum / 100.0
@@ -748,11 +663,7 @@ object StreamingQueries {
             }
             ring = (cents(e.value) :: ring).take(20)
           }
-          state.update(AnState(ring, buf))
-          if (buf.nonEmpty)
-            state.setTimeoutTimestamp(math.max(
-              (buf.map(_.ts_us).min / 1000L) + 1L,
-              state.getCurrentWatermarkMs() + 1L))
+          byEventId.save(state, AnState(ring, buf), buf)
           outRows.iterator
       }
   }
@@ -773,11 +684,11 @@ object StreamingQueries {
   /** The s35 state machine, separated so the split-invariance spec
     * can drive it over a fuzz-partitioned source.
     */
-  private[graft] def asofEnrichTransform(
-      src: org.apache.spark.sql.Dataset[PatternStream.Ev])
-      : org.apache.spark.sql.Dataset[AeOut] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+  private[graft] def asofEnrichTransform(src: Dataset[PatternStream.Ev])
+      : Dataset[AeOut] = {
     import src.sparkSession.implicits._
+    val fold = WatermarkFold.byTime[AeBuf, (Long, Long)](
+      _.ts_us, e => (e.ts_us, e.event_id))
     src.groupByKey(_.user_id)
       .flatMapGroupsWithState[AeState, AeOut](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
@@ -787,15 +698,11 @@ object StreamingQueries {
           var dimId = prev.dimId
           var dimValue = prev.dimValue
           var dimUs = prev.dimUs
-          var buf = prev.buf
-          if (!state.hasTimedOut)
-            buf = buf ++ it.filter(_.event_type != "__sentinel")
-              .map(e => AeBuf(e.event_id, e.ts_us, e.value, e.event_type))
-          val wm = state.getCurrentWatermarkMs() * 1000L
-          val (safe, waiting) = buf.partition(_.ts_us <= wm)
-          buf = waiting
+          val (ready, buf) = fold.release(state, prev.buf,
+            it.filter(_.event_type != "__sentinel")
+              .map(e => AeBuf(e.event_id, e.ts_us, e.value, e.event_type)))
           val outRows = scala.collection.mutable.ArrayBuffer.empty[AeOut]
-          for (e <- safe.sortBy(x => (x.ts_us, x.event_id))) {
+          for (e <- ready) {
             if (e.event_type == "signup") {
               dimId = Some(e.event_id)
               dimValue = Some(e.value)
@@ -805,28 +712,15 @@ object StreamingQueries {
                 dimUs.map(d => e.ts_us - d))
             }
           }
-          state.update(AeState(dimId, dimValue, dimUs, buf))
-          if (buf.nonEmpty)
-            state.setTimeoutTimestamp(math.max(
-              (buf.map(_.ts_us).min / 1000L) + 1L,
-              state.getCurrentWatermarkMs() + 1L))
+          fold.save(state, AeState(dimId, dimValue, dimUs, buf), buf)
           outRows.iterator
       }
   }
 
-  def streamAsofEnrich(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val path = s"$dir/events.parquet"
-    val schema = schemaOf(spark, path)
-    val src = graft.Tables.normalizeEvents(
-      spark.readStream.schema(schema).parquet(closedStreamDir(spark, path)))
-      .withWatermark("ts", "1 second")
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        col("value"), unix_micros(col("ts")).as("ts_us"), col("ts"))
-      .as[PatternStream.Ev]
-    runToTable(spark, asofEnrichTransform(src).toDF(), "graft_s35_sink",
-      "append")
-  }
+  def streamAsofEnrich(spark: SparkSession, dir: String): DataFrame =
+    runToTable(spark,
+      asofEnrichTransform(asEv(closedEvents(spark, dir))).toDF(),
+      "graft_s35_sink", "append")
 
   /** #35-streaming: exact dedup on a live stream — `dropDuplicates`
     * over keyed state, suppressing repeat clicks per (user, hour).
@@ -925,12 +819,7 @@ object StreamingQueries {
     * oracle.
     */
   def streamTrend(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/events.parquet"
-    val schema = schemaOf(spark, path)
-    val src = graft.Tables.normalizeEvents(
-      spark.readStream.schema(schema).parquet(closedStreamDir(spark, path)))
-    val agg = src
-      .withWatermark("ts", "1 second")
+    val agg = closedEvents(spark, dir)
       .filter(col("event_type") === "error" ||
         col("event_type") === "__sentinel")
       .groupBy(col("user_id"), window(col("ts"), "1 hour"))
@@ -956,11 +845,7 @@ object StreamingQueries {
   def streamForecastOnline(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     implicit val s: SparkSession = spark
-    val path = s"$dir/events.parquet"
-    val schema = schemaOf(spark, path)
-    val src = graft.Tables.normalizeEvents(
-      spark.readStream.schema(schema).parquet(closedStreamDir(spark, path)))
-      .withWatermark("ts", "1 second")
+    val src = closedEvents(spark, dir)
       .select(col("event_id"), col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("ts_us"), col("ts"))
       .as[ForecastStream.FEv]
@@ -981,18 +866,13 @@ object StreamingQueries {
     * it emits nothing.
     */
   def streamMultiTrend(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/events.parquet"
-    val schema = schemaOf(spark, path)
-    val src = graft.Tables.normalizeEvents(
-      spark.readStream.schema(schema).parquet(closedStreamDir(spark, path)))
     val pats = Seq("error", "click", "purchase")
     val aggs = pats.flatMap { p =>
       Seq(count(when(col("event_type") === p, 1)).as(s"n_$p"),
         graft.cep.TrendAggregate.countTrends(
           count(when(col("event_type") === p, 1))).as(s"trends_$p"))
     }
-    val agg = src
-      .withWatermark("ts", "1 second")
+    val agg = closedEvents(spark, dir)
       .filter(col("event_type").isin(pats: _*) ||
         col("event_type") === "__sentinel")
       .groupBy(col("user_id"), window(col("ts"), "1 hour"))
@@ -1019,15 +899,7 @@ object StreamingQueries {
     */
   def streamHeavyHitters(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val path = s"$dir/events.parquet"
-    val schema = schemaOf(spark, path)
-    val src = graft.Tables.normalizeEvents(
-      spark.readStream.schema(schema).parquet(closedStreamDir(spark, path)))
-      .withWatermark("ts", "1 second")
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        col("value"), unix_micros(col("ts")).as("ts_us"), col("ts"))
-      .as[PatternStream.Ev]
+    val src = asEv(closedEvents(spark, dir))
     val winUs = 3600L * 1000000L
     val out = src.groupByKey(e => (e.ts_us / winUs) * 3600L)
       .flatMapGroupsWithState[Map[String, Long], HhOut](
@@ -1481,7 +1353,6 @@ object StreamingQueries {
     */
   def streamIncrementalDedup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     val path = s"$dir/documents.parquet"
     val schema = schemaOf(spark, path)
     val srcnum = regexp_extract(col("source"), "[0-9]+", 0).cast("int")
@@ -1501,7 +1372,7 @@ object StreamingQueries {
       .flatMapGroupsWithState[IdState, IdOut](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (_: String, it: Iterator[IdIn],
-         state: org.apache.spark.sql.streaming.GroupState[IdState]) =>
+         state: GroupState[IdState]) =>
           var seen = state.getOption.exists(_.seen)
           val rows = it.toArray.sortBy(_.doc_id).map { e =>
             val status =
@@ -1532,7 +1403,6 @@ object StreamingQueries {
   def packStream(spark: SparkSession, docs: DataFrame, nShards: Int,
       budget: Long): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     import graft.functions.{Fnv64, PackGreedyUtil}
     import graft.functions.TextFunctions.bpeishTokenCount
     val in = docs.select(
@@ -1545,7 +1415,7 @@ object StreamingQueries {
       .flatMapGroupsWithState[PkState, PkOut](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (shard: Long, it: Iterator[PkIn],
-         state: org.apache.spark.sql.streaming.GroupState[PkState]) =>
+         state: GroupState[PkState]) =>
           val s0 = state.getOption.getOrElse(PkState(0L, 0L))
           var bin = s0.bin; var used = s0.used
           val rows = it.toArray.sortBy(_.doc_id).map { e =>
@@ -1569,53 +1439,39 @@ object StreamingQueries {
     * running count is below cap — zero latency, same state shape);
     * the finalized form here is the one a replay/audit reproduces.
     */
-  def streamRateLimit(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val path = s"$dir/events.parquet"
-    val schema = schemaOf(spark, path)
-    val src = graft.Tables.normalizeEvents(
-      spark.readStream.schema(schema).parquet(closedStreamDir(spark, path)))
-      .withWatermark("ts", "1 second")
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        col("value"), unix_micros(col("ts")).as("ts_us"), col("ts"))
-      .as[PatternStream.Ev]
-    runToTable(spark, rateLimitTransform(src).toDF()
+  def streamRateLimit(spark: SparkSession, dir: String): DataFrame =
+    runToTable(spark, rateLimitTransform(asEv(closedEvents(spark, dir))).toDF()
       .select(col("event_id"), col("user_id"), col("win_start"),
         col("admitted")), "graft_s21_sink", "append")
-  }
 
   /** The s21 fold, exposed so the split-invariance spec can drive it. */
-  private[graft] def rateLimitTransform(
-      src: org.apache.spark.sql.Dataset[PatternStream.Ev])
-      : org.apache.spark.sql.Dataset[RlOut] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+  private[graft] def rateLimitTransform(src: Dataset[PatternStream.Ev])
+      : Dataset[RlOut] = {
     import src.sparkSession.implicits._
     val maxPerWindow = 2
     val hourUs = 3600L * 1000000L
+    // an event is final once its whole hour is, and due at the hour end
+    def hourEndUs(e: EmaBuf): Long = (e.ts_us / hourUs + 1L) * hourUs
+    val fold = new WatermarkFold[EmaBuf, (Long, Long)](hourEndUs,
+      e => (e.ts_us / hourUs, e.event_id), hourEndUs(_) / 1000L)
     src.groupByKey(_.user_id)
       .flatMapGroupsWithState[RlState, RlOut](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (user: Long, it: Iterator[PatternStream.Ev],
          state: GroupState[RlState]) =>
-          var buf = state.getOption.map(_.buf).getOrElse(Nil)
-          if (!state.hasTimedOut)
-            buf = buf ++ it.filter(_.event_type != "__sentinel")
-              .map(e => EmaBuf(e.event_id, e.ts_us, 0.0))
-          val wm = state.getCurrentWatermarkMs() * 1000L
-          val (done, waiting) = buf.partition(e =>
-            (e.ts_us / hourUs + 1L) * hourUs <= wm)
-          val outRows = done.groupBy(_.ts_us / hourUs).toSeq.sortBy(_._1)
-            .flatMap { case (h, evs) =>
-              evs.sortBy(_.event_id).zipWithIndex.map { case (e, i) =>
-                RlOut(e.event_id, user, h * 3600L, i < maxPerWindow)
-              }
-            }
-          state.update(RlState(waiting))
-          if (waiting.nonEmpty)
-            state.setTimeoutTimestamp(math.max(
-              waiting.map(e => (e.ts_us / hourUs + 1L) * hourUs / 1000L).min,
-              state.getCurrentWatermarkMs() + 1L))
+          val (ready, buf) = fold.release(state,
+            state.getOption.map(_.buf).getOrElse(Nil),
+            it.filter(_.event_type != "__sentinel")
+              .map(e => EmaBuf(e.event_id, e.ts_us, 0.0)))
+          var hour = Long.MinValue
+          var rank = 0
+          val outRows = ready.map { e =>
+            val h = e.ts_us / hourUs
+            if (h != hour) { hour = h; rank = 0 }
+            rank += 1
+            RlOut(e.event_id, user, h * 3600L, rank <= maxPerWindow)
+          }
+          fold.save(state, RlState(buf), buf)
           outRows.iterator
       }
   }
@@ -1627,61 +1483,43 @@ object StreamingQueries {
     * [[graft.functions.BreakerReplayUtil.step]] the batch expression
     * uses — decisions cannot diverge between the two paths (shares
     * g3's oracle). State is the 3-field breaker tuple plus the
-    * not-yet-final buffer; an unbounded run's state stays bounded by
-    * the watermark delay.
+    * [[WatermarkFold]] buffer; an unbounded run's state stays bounded
+    * by the watermark delay.
     */
-  def streamBreaker(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val path = s"$dir/events.parquet"
-    val schema = schemaOf(spark, path)
-    val src = graft.Tables.normalizeEvents(
-      spark.readStream.schema(schema).parquet(closedStreamDir(spark, path)))
-      .withWatermark("ts", "1 second")
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        col("value"), unix_micros(col("ts")).as("ts_us"), col("ts"))
-      .as[PatternStream.Ev]
-    runToTable(spark, breakerTransform(src).toDF()
+  def streamBreaker(spark: SparkSession, dir: String): DataFrame =
+    runToTable(spark, breakerTransform(asEv(closedEvents(spark, dir))).toDF()
       .select(col("connector"), col("event_id"), col("decision"),
         col("state_after")), "graft_s22_sink", "append")
-  }
 
   /** The s22 fold, exposed so the split-invariance spec can drive it. */
-  private[graft] def breakerTransform(
-      src: org.apache.spark.sql.Dataset[PatternStream.Ev])
-      : org.apache.spark.sql.Dataset[BkOut] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+  private[graft] def breakerTransform(src: Dataset[PatternStream.Ev])
+      : Dataset[BkOut] = {
     import src.sparkSession.implicits._
+    import graft.functions.BreakerReplayUtil
     val threshold = 3
     val timeoutUs = 3600L * 1000000L
-    import graft.functions.BreakerReplayUtil
     val decisions = Array("sent", "rejected", "probe")
+    val fold = WatermarkFold.byTime[BkEv, Long](_.ts_us, _.event_id)
     src.groupByKey(_.event_type)
       .flatMapGroupsWithState[BkStreamState, BkOut](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (connector: String, it: Iterator[PatternStream.Ev],
          state: GroupState[BkStreamState]) =>
-          var st = state.getOption.getOrElse(
+          val st = state.getOption.getOrElse(
             BkStreamState(open = false, consec = 0, openedUs = 0L, Nil))
-          var buf = st.buf
-          if (!state.hasTimedOut)
-            buf = buf ++ it.filter(_.event_type != "__sentinel")
-              .map(e => BkEv(e.event_id, e.ts_us, e.value >= 5.0))
-          val wm = state.getCurrentWatermarkMs() * 1000L
-          val (safe, waiting) = buf.partition(_.ts_us <= wm)
+          val (ready, buf) = fold.release(state, st.buf,
+            it.filter(_.event_type != "__sentinel")
+              .map(e => BkEv(e.event_id, e.ts_us, e.value >= 5.0)))
           var bk = BreakerReplayUtil.BkState(st.open, st.consec, st.openedUs)
-          val outRows = safe.sortBy(_.event_id).map { e =>
+          val outRows = ready.map { e =>
             val (dec, bk2) =
               BreakerReplayUtil.step(bk, e.ts_us, e.ok, threshold, timeoutUs)
             bk = bk2
             BkOut(connector, e.event_id, decisions(dec),
               if (bk.open) "open" else "closed")
           }
-          state.update(BkStreamState(bk.open, bk.consec, bk.openedUs, waiting))
-          if (waiting.nonEmpty)
-            state.setTimeoutTimestamp(math.max(
-              (waiting.map(_.ts_us).min / 1000L) + 1L,
-              state.getCurrentWatermarkMs() + 1L))
+          fold.save(state,
+            BkStreamState(bk.open, bk.consec, bk.openedUs, buf), buf)
           outRows.iterator
       }
   }

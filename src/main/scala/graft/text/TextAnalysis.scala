@@ -508,10 +508,19 @@ object TextAnalysis {
       .select(
         col("doc_id"),
         col("n_grams").cast("long").as("n_grams"),
-        round(col("wsum").cast("double"), 6).as("dsir_weight"),
+        dsirWeight(col("wsum")),
         round(col("wsum").cast("double") / col("n_grams").cast("double"), 6)
           .as("avg_lr"))
   }
+
+  /** `dsir_weight` from the exact decimal log-ratio sum: rounded to 6
+    * places BEFORE the cast to double, so a sum exactly halfway
+    * between two 6-dp values rounds HALF_UP in every engine (rounding
+    * the nearest double instead depends on which side of the halfway
+    * point that double falls, and engines disagree).
+    */
+  private[graft] def dsirWeight(wsum: Column): Column =
+    round(wsum, 6).cast("double").as("dsir_weight")
 
   /** Fit the DSIR model on a STATIC corpus and return the per-bucket
     * log-ratios as SCALED LONGS (DECIMAL(18,9) unscaled values) for
@@ -580,12 +589,15 @@ object TextAnalysis {
     docs.select(idCol.as("doc_id"), sc.as("sc"))
       .select(col("doc_id"),
         element_at(col("sc"), 1).as("n_grams"),
-        (element_at(col("sc"), 2).cast("double") / lit(1e9d)).as("wd"))
+        element_at(col("sc"), 2).as("scaled"))
       // batch emits only docs with >= 1 gram (inner join post-explode)
       .where(col("n_grams") > 0L)
       .select(col("doc_id"), col("n_grams"),
-        round(col("wd"), 6).as("dsir_weight"),
-        round(col("wd") / col("n_grams").cast("double"), 6).as("avg_lr"))
+        // the scaled long IS the batch path's DECIMAL(.., 9) sum
+        dsirWeight(col("scaled").cast("decimal(19,0)") *
+          lit(new java.math.BigDecimal("1e-9"))),
+        round(col("scaled").cast("double") / lit(1e9d) /
+          col("n_grams").cast("double"), 6).as("avg_lr"))
   }
 
   /** Model-based quality classification — the fastText /

@@ -67,7 +67,7 @@ class CheckpointSpec extends SparkSpec {
         .outputMode("append").start()
       try q.processAllAvailable() finally q.stop()
     }
-    // mask-0 sentinels advance the watermark so the finalized-prefix
+    // mask-0 sentinels advance the watermark so the WatermarkFold
     // buffer flushes at each phase end
     def sentinel(id: Long, offUs: Long) =
       GEv(id, "zz", base + offUs,

@@ -405,6 +405,27 @@ class TextSpec extends SparkSpec {
     assert(batch.except(local).isEmpty && local.except(batch).isEmpty)
   }
 
+  test("dsir: a halfway weight sum rounds on the exact decimal") {
+    import spark.implicits._
+    // -2.0762145 is exactly halfway between two 6-dp values, and its
+    // nearest double lies just above it: rounding after the cast to
+    // DOUBLE gives -2.076214 in an engine that rounds the binary value
+    // (DuckDB, the t13/s26 oracle), so every side rounds the exact
+    // DECIMAL sum HALF_UP to -2.076215 before the cast
+    val batch = Seq("-2.0762145").toDF("lr")
+      .agg(sum(col("lr").cast("decimal(18,9)")).as("wsum"))
+      .select(graft.text.TextAnalysis.dsirWeight(col("wsum")))
+      .as[Double].collect().toSeq
+    assert(batch == Seq(-2.076215))
+    // the row-local scorer: a one-gram doc under a model whose every
+    // bucket holds the halfway ratio
+    val local = graft.text.TextAnalysis.dsirScoreLocal(
+      Seq((1L, "alpha")).toDF("doc_id", "text"), col("text"), col("doc_id"),
+      Array.fill(4096)(-2076214500L))
+    assert(local.select("n_grams", "dsir_weight").as[(Long, Double)]
+      .collect().toSeq == Seq((1L, -2.076215)))
+  }
+
   test("lm fluency: reference-like text outscores scrambled text") {
     import spark.implicits._
     // train on the 'en' slice; fluent docs reuse its bigrams, the
