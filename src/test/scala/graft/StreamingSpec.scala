@@ -414,29 +414,28 @@ class StreamingSpec extends SparkSpec {
   // one minute apart; values and the 7-way file split drawn from the
   // same seeded generator. Each fold's output over the split delivery
   // must equal its output over one file holding every event.
-  private def fuzzEvents(rnd: scala.util.Random)
-      : Seq[(Long, Long, String, Long, Double)] = {
-    val base = 1704067200L * 1000000L
+  private val fuzzBase = 1704067200L * 1000000L
+  private type FuzzEv = (Long, Long, String, Long, Double)
+  private type Fold = org.apache.spark.sql.Dataset[graft.streaming.PatternStream.Ev] =>
+    org.apache.spark.sql.DataFrame
+
+  private def fuzzEvents(rnd: scala.util.Random): Seq[FuzzEv] =
     (1 to 120).map { i =>
       val et =
         if (i % 7 == 0) "signup" else if (i % 3 == 0) "purchase" else "click"
-      (i.toLong, (i % 5).toLong + 1, et, base + i * 60000000L,
+      (i.toLong, (i % 5).toLong + 1, et, fuzzBase + i * 60000000L,
         rnd.nextInt(1000) / 10.0)
     }
-  }
 
   /** Runs `transform` over `files` (plus a closing sentinel file),
     * delivered one file per trigger, and returns its rows as sorted
     * strings with the count of micro-batches that carried input.
     */
-  private def runFuzz(name: String,
-      files: Seq[Seq[(Long, Long, String, Long, Double)]],
-      transform: org.apache.spark.sql.Dataset[graft.streaming.PatternStream.Ev] =>
-        org.apache.spark.sql.DataFrame): (Seq[String], Int) = {
+  private def runFuzz(name: String, files: Seq[Seq[FuzzEv]], transform: Fold)
+      : (Seq[String], Int) = {
     import spark.implicits._
-    val base = 1704067200L * 1000000L
     val dir = java.nio.file.Files.createTempDirectory("graft_splitfuzz_").toString
-    val sentinel = (9999L, 0L, "__sentinel", base + 259200L * 1000000L, 0.0)
+    val sentinel = (9999L, 0L, "__sentinel", fuzzBase + 259200L * 1000000L, 0.0)
     (files :+ Seq(sentinel)).zipWithIndex.foreach { case (evs, b) =>
       evs.toDF("event_id", "user_id", "event_type", "us", "value")
         .withColumn("ts", timestamp_micros(col("us")))
@@ -458,8 +457,7 @@ class StreamingSpec extends SparkSpec {
 
   {
     import graft.streaming.StreamingQueries._
-    Seq[(String, String, org.apache.spark.sql.Dataset[graft.streaming.PatternStream.Ev] =>
-        org.apache.spark.sql.DataFrame)](
+    Seq[(String, String, Fold)](
       ("s9", "EMA", src => emaTransform(src).toDF()),
       ("s32", "Hawkes intensity",
         src => hawkesTransform(src, 0.001, 0.002, 0.0005).toDF()),
