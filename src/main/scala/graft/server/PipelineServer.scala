@@ -31,9 +31,9 @@ import graft.vpl.VplParser.VplParseError
   * streaming mode over a spool directory seeded with a zero-row
   * staged file ([[EventReplay.stageEmpty]]); each compiled stream
   * runs append-mode through foreachBatch into a driver-side buffer
-  * AND out through its bound `.to` connectors. Inject renders the
-  * JSON events as an `.evt` phase, appends it to the spool
-  * ([[EventReplay.stagePhase]] — zero-padded sequence, disjoint
+  * AND out through its bound `.to` connectors. Inject validates the
+  * JSON events and appends them to the spool as one phase file
+  * ([[EventReplay.stageEvents]] — zero-padded sequence, disjoint
   * event_id range, event time advancing 1 s per inject), drives every
   * query with `processAllAvailable()`, and returns the rows each run
   * gained — exactly "the output events emitted by processing this
@@ -780,16 +780,9 @@ final class PipelineServer private (
         p.ingests.foreach(stop => Try(stop()))
         p.runs.foreach(r => Try(r.query.stop()))
         // fresh spool: seed + every staged file with phase <= extent
-        // (stagePhase names files batch_<phase*10000 + i> and pins
-        // modtimes, so the numeric part IS the phase-ordered index)
         val dir = java.nio.file.Files
           .createTempDirectory(s"graft_api_${p.id}_restore_").toString
-        val cut = (phases + 1) * 10000
-        val kept = p.staged.files.filter { case (f, _) =>
-          val num = new java.io.File(f).getName
-            .stripPrefix("batch_").stripSuffix(".parquet")
-          Try(num.toInt).toOption.exists(_ < cut)
-        }.map { case (f, d) =>
+        val kept = EventReplay.upToPhase(p.staged, phases).map { case (f, d) =>
           val src = new java.io.File(f)
           val dst = new java.io.File(dir, src.getName)
           java.nio.file.Files.copy(src.toPath, dst.toPath)
@@ -953,10 +946,14 @@ final class PipelineServer private (
         }
         root.get("events").elements().asScala.toSeq
       } else Seq(root)
-    val lines = events.map(evtLine) collect { case Right(l) => l }
-    if (lines.size != events.size) {
-      val firstErr = events.map(evtLine)
-        .collectFirst { case Left(m) => m }.get
+    val checked = events.map { ev =>
+      if (!ev.hasNonNull("event_type") || !ev.hasNonNull("fields") ||
+          !ev.get("fields").isObject) Left("need {event_type, fields}")
+      else injectedEvent(ev.get("event_type").asText(), ev.get("fields"))
+    }
+    val rows = checked.collect { case Right(e) => e }
+    if (rows.size != events.size) {
+      val firstErr = checked.collectFirst { case Left(m) => m }.get
       error(x, 400, "parse_error", firstErr); return
     }
     // per-tenant event-rate quota (tenant.rs TenantUsage.record_event:
@@ -965,7 +962,7 @@ final class PipelineServer private (
     // standalone mode — unmetered, like the reference without a
     // tenant manager
     val overRate = p.tenant != "default" &&
-      Option(tenants.get(p.tenant)).exists(t => !t.recordEvents(lines.size))
+      Option(tenants.get(p.tenant)).exists(t => !t.recordEvents(rows.size))
     if (overRate) {
       val max = Option(tenants.get(p.tenant))
         .map(_.quota.maxEventsPerSecond).getOrElse(0L)
@@ -978,18 +975,14 @@ final class PipelineServer private (
     val out = p.synchronized {
       val phase = p.nextPhase
       p.nextPhase += 1
-      val evt = java.nio.file.Files.createTempFile("graft_api_inject_", ".evt")
-      java.nio.file.Files.writeString(evt, lines.mkString("\n") + "\n")
-      p.staged = EventReplay.stagePhase(spark, evt.toString, p.staged,
-        phase = phase, afterDelayMs = phase * 1000L, sentinel = false)
-      java.nio.file.Files.deleteIfExists(evt)
-      p.eventsProcessed += lines.size
+      p.staged = EventReplay.stageEvents(spark, p.staged, phase, rows)
+      p.eventsProcessed += rows.size
       p.runs.foreach(_.query.processAllAvailable())
       drainRuns(p)
     }
     val o = mapper.createObjectNode()
     if (batch) {
-      o.put("accepted", lines.size)
+      o.put("accepted", rows.size)
       o.set[ObjectNode]("output_events", out)
       o.put("processing_time_us", (System.nanoTime() - t0) / 1000L)
     } else {
@@ -1406,22 +1399,17 @@ object PipelineServer {
     }
   }
 
-  /** One injected JSON event → one `.evt` line `Type { k: v, … }`.
-    * Values follow the .evt literal forms the [[graft.sources
-    * .EventFile]] reader (and the reference's event_file.rs) accept:
-    * quoted strings, bare integers/floats/booleans. Keys must be
-    * identifiers; strings with quotes/newlines are rejected loudly
-    * rather than silently corrupting the spool line.
+  /** One injected event's type and JSON field object → the type and
+    * `(key, literal)` pairs for [[EventReplay.stageEvents]]: quoted
+    * strings, bare integers/floats/booleans, which undeclared-event type
+    * inference reads. Types and keys must be identifiers; quotes/newlines
+    * in strings reject loudly.
     */
-  private[server] def evtLine(ev: JsonNode): Either[String, String] = {
-    if (!ev.hasNonNull("event_type") || !ev.hasNonNull("fields") ||
-        !ev.get("fields").isObject)
-      return Left("need {event_type, fields}")
-    val t = ev.get("event_type").asText()
+  private[graft] def injectedEvent(t: String,
+      fields: JsonNode): Either[String, (String, Seq[(String, String)])] = {
     if (!t.matches("[A-Za-z_][A-Za-z0-9_]*"))
       return Left(s"invalid event_type '$t'")
-    val fields = ev.get("fields").properties().asScala.toSeq
-    val rendered = fields.map { e =>
+    val literals = fields.properties().asScala.toSeq.map { e =>
       val (k, v) = (e.getKey, e.getValue)
       if (!k.matches("[A-Za-z_][A-Za-z0-9_]*"))
         return Left(s"invalid field name '$k'")
@@ -1429,16 +1417,16 @@ object PipelineServer {
         if (v.isTextual) {
           val s = v.asText()
           if (s.contains("\"") || s.contains("\n") || s.contains("\r"))
-            return Left(s"field '$k': quotes/newlines not representable " +
-              "in .evt string literals")
+            return Left(s"field '$k': quotes/newlines are not accepted " +
+              "in string values")
           "\"" + s + "\""
         } else if (v.isIntegralNumber) v.asLong().toString
         else if (v.isFloatingPointNumber) v.asDouble().toString
         else if (v.isBoolean) v.asBoolean().toString
         else return Left(s"field '$k': unsupported JSON type ${v.getNodeType}")
-      s"$k: $lit"
+      k -> lit
     }
-    Right(s"$t { ${rendered.mkString(", ")} }")
+    Right(t -> literals)
   }
 
   /** Schema-driven Row → JSON object (output events). */

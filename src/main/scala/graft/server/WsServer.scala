@@ -36,7 +36,7 @@ import graft.vpl.VplParser.VplParseError
   * Engine semantics mirror [[PipelineServer]]'s Spark-first shape:
   * `load_file` compiles the program's streams in STREAMING mode over
   * a fresh spool (each load replaces the engine, the reference's
-  * Engine::new-per-load), `inject_event` stages one `.evt` phase,
+  * Engine::new-per-load), `inject_event` stages one spool phase,
   * drives the queries, and broadcasts each fresh output row as an
   * `output_event`. The file path resolves against an allowed working
   * directory and must stay inside it (security.rs validate_path);
@@ -52,7 +52,7 @@ final class WsServer private (
     workdir: java.io.File,
     tls: Option[javax.net.ssl.SSLContext]) {
 
-  import PipelineServer.{ensureSpools, evtLine, rowToJson}
+  import PipelineServer.{ensureSpools, injectedEvent, rowToJson}
   import WsServer._
 
   private val mapper = new ObjectMapper()
@@ -495,7 +495,7 @@ final class WsServer private (
     }
   }
 
-  /** inject_event {event_type, data}: stage one .evt phase, drive the
+  /** inject_event {event_type, data}: stage one spool phase, drive the
     * queries, broadcast each fresh output row as an output_event to
     * EVERY connected client, answer event_injected.
     */
@@ -508,11 +508,8 @@ final class WsServer private (
     if (data.size() > MaxEventFields)
       return errorMsg(
         s"Event exceeds maximum field count (${data.size()} > $MaxEventFields)")
-    val ev = mapper.createObjectNode()
-    ev.put("event_type", eventType)
-    ev.set[ObjectNode]("fields", data.deepCopy[JsonNode]())
-    val line = evtLine(ev) match {
-      case Right(l)  => l
+    val row = injectedEvent(eventType, data) match {
+      case Right(r)  => r
       case Left(why) => return errorMsg(s"Failed to process event: $why")
     }
     val fresh: Seq[(String, Row)] = engine.synchronized {
@@ -520,12 +517,8 @@ final class WsServer private (
         return errorMsg("No engine loaded. Load a .vpl file first.")
       val phase = engine.nextPhase
       engine.nextPhase += 1
-      val evt = java.nio.file.Files.createTempFile("graft_ws_inject_", ".evt")
-      java.nio.file.Files.writeString(evt, line + "\n")
-      engine.staged = EventReplay.stagePhase(spark, evt.toString,
-        engine.staged, phase = phase, afterDelayMs = phase * 1000L,
-        sentinel = false)
-      java.nio.file.Files.deleteIfExists(evt)
+      engine.staged = EventReplay.stageEvents(spark, engine.staged, phase,
+        Seq(row))
       engine.eventsProcessed += 1
       engine.runs.foreach(_.query.processAllAvailable())
       val out = engine.runs.flatMap(r => r.drainFresh().map(r.name -> _))

@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,6 +24,7 @@ import org.apache.spark.sql.functions._
   * Staging loops over BATCH groups on the driver; an .evt scenario is
   * a test artifact (tens of batches), not a data path — the data path
   * is the stream reader, which is ordinary distributed file streaming.
+  * Live injects skip the text: [[stageEvents]] writes their rows.
   */
 object EventReplay {
 
@@ -29,6 +32,12 @@ object EventReplay {
     * the data on purpose (scenario time is relative).
     */
   val DefaultBaseEpochMs: Long = 1704067200000L
+
+  /** Appended phase k owns files `batch_<k * 10000 + i>` and event
+    * ids from `k * 1e9`: phases sort in order and never collide.
+    */
+  private val PhaseFileStride = 10000
+  private val PhaseIdStride = 1000000000L
 
   /** files = (path, delayMs) in BATCH order. */
   final case class Staged(dir: String, files: Seq[(String, Long)], nBatches: Int)
@@ -64,33 +73,15 @@ object EventReplay {
     val delays = parsed.select("delay_ms").distinct()
       .orderBy("delay_ms").collect().map(_.getLong(0))
     val lastMs = delays.lastOption.getOrElse(delayOffsetMs)
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_replay_stage_").toString
-    def writeOne(df: DataFrame, idx: Int): String = {
-      val out = s"$tmp/b$idx"
-      df.coalesce(1).write.mode("overwrite").parquet(out)
-      val part = new java.io.File(out).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val dest = new java.io.File(stagedDir,
-        f"batch_${idx + fileIdxOffset}%05d.parquet")
-      java.nio.file.Files.move(part.toPath, dest.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      // FileStreamSource orders by (modTime, path): pin both
-      dest.setLastModified(baseEpochMs + (idx + fileIdxOffset) * 1000L)
-      dest.getPath
-    }
     val files = delays.zipWithIndex.map { case (d, i) =>
-      (writeOne(parsed.filter(col("delay_ms") === d), i), d)
+      (writeBatch(parsed.filter(col("delay_ms") === d), stagedDir,
+        i + fileIdxOffset, baseEpochMs), d)
     }.toSeq
     val sentinelFiles = if (sentinel) {
-      val s = spark.range(1).select(
-        lit(-1L).as("event_id"),
-        lit("__sentinel").as("event_type"),
-        timestamp_millis(lit(baseEpochMs + lastMs + 7200000L)).as("ts"),
-        lit(lastMs + 7200000L).as("delay_ms"),
-        map().cast("map<string,string>").as("fields"),
-        map().cast("map<string,string>").as("fields_raw"))
-      Seq((writeOne(s, delays.length), lastMs + 7200000L))
+      val s = spoolFrame(spark, baseEpochMs,
+        Seq((-1L, "__sentinel", lastMs + 7200000L, Map.empty, Map.empty)))
+      Seq((writeBatch(s, stagedDir, delays.length + fileIdxOffset,
+        baseEpochMs), lastMs + 7200000L))
     } else Nil
     parsed.unpersist()
     Staged(dir, files ++ sentinelFiles, delays.length)
@@ -114,18 +105,54 @@ object EventReplay {
       baseEpochMs: Long = DefaultBaseEpochMs): Staged = {
     val more = stage(spark, evtPath, staged.dir, baseEpochMs,
       sentinel = sentinel,
-      fileIdxOffset = phase * 10000,
-      idOffset = phase * 1000000000L,
+      fileIdxOffset = phase * PhaseFileStride,
+      idOffset = phase * PhaseIdStride,
       delayOffsetMs = afterDelayMs)
     Staged(staged.dir, staged.files ++ more.files,
       staged.nBatches + more.nBatches)
   }
 
+  /** The servers' inject path: append one phase of validated events,
+    * each a type and `(key, .evt literal)` pairs, as the rows
+    * [[stagePhase]] writes for them with `afterDelayMs = phase * 1000`.
+    * Built on the driver (one write job, no text round trip), so
+    * string values may hold commas.
+    */
+  def stageEvents(
+      spark: SparkSession,
+      staged: Staged,
+      phase: Int,
+      events: Seq[(String, Seq[(String, String)])]): Staged =
+    if (events.isEmpty) staged
+    else {
+      val delayMs = phase * 1000L
+      val rows = events.zipWithIndex.map { case ((eventType, raw), i) =>
+        val fields = raw.map { case (k, v) =>
+          k -> v.stripPrefix("\"").stripSuffix("\"")
+        }
+        (phase * PhaseIdStride + i, eventType, delayMs,
+          ListMap.from(fields), ListMap.from(raw))
+      }
+      val file = writeBatch(spoolFrame(spark, DefaultBaseEpochMs, rows),
+        new java.io.File(staged.dir), phase * PhaseFileStride,
+        DefaultBaseEpochMs)
+      Staged(staged.dir, staged.files :+ (file -> delayMs),
+        staged.nBatches + 1)
+    }
+
+  /** The staged files of phases `<= phase`, the seed included. */
+  def upToPhase(staged: Staged, phase: Int): Seq[(String, Long)] =
+    staged.files.filter { case (f, _) =>
+      new java.io.File(f).getName.stripPrefix("batch_")
+        .stripSuffix(".parquet").toIntOption
+        .exists(_ < (phase + 1) * PhaseFileStride)
+    }
+
   /** Seed a spool directory with a ZERO-ROW staged file — the deploy
     * shape of the pipeline-management API, where a streaming query
     * must start on an empty event log (the file source needs at least
     * one file to carry the schema) and later injects append via
-    * [[stagePhase]].
+    * [[stageEvents]].
     */
   def stageEmpty(
       spark: SparkSession,
@@ -133,23 +160,47 @@ object EventReplay {
       baseEpochMs: Long = DefaultBaseEpochMs): Staged = {
     val target = new java.io.File(dir)
     target.mkdirs()
-    val empty = spark.range(0).select(
-      lit(0L).as("event_id"),
-      lit("").as("event_type"),
-      timestamp_millis(lit(baseEpochMs)).as("ts"),
-      lit(0L).as("delay_ms"),
-      map().cast("map<string,string>").as("fields"),
-      map().cast("map<string,string>").as("fields_raw"))
+    val empty = spoolFrame(spark, baseEpochMs, Nil)
+    Staged(dir, Seq((writeBatch(empty, target, 0, baseEpochMs), 0L)), 0)
+  }
+
+  /** Driver-side spool rows `(event_id, event_type, delay_ms, fields,
+    * fields_raw)` as the spool columns, event time `base + delay_ms`.
+    */
+  private def spoolFrame(spark: SparkSession, baseEpochMs: Long,
+      rows: Seq[(Long, String, Long, Map[String, String], Map[String, String])])
+      : DataFrame =
+    spark.createDataFrame(rows)
+      .toDF("event_id", "event_type", "delay_ms", "fields", "fields_raw")
+      .select(col("event_id"), col("event_type"),
+        timestamp_millis(lit(baseEpochMs) + col("delay_ms")).as("ts"),
+        col("delay_ms"), col("fields"), col("fields_raw"))
+
+  /** Write `df` as the one file `dir/batch_<idx>.parquet`, modtime
+    * pinned to `base + idx` s: FileStreamSource orders by (modTime, path).
+    * The modtime is set before the move, because a running stream that
+    * lists the file under its wall-clock write time skips every later,
+    * older-stamped file as past `maxFileAge`. The move is an atomic
+    * rename, so `dir` must share a filesystem with `java.io.tmpdir`
+    * (every spool is a temp directory); otherwise it fails rather
+    * than copying the file in under a wall-clock modtime.
+    */
+  private def writeBatch(df: DataFrame, dir: java.io.File, idx: Int,
+      baseEpochMs: Long): String = {
     val tmp = java.nio.file.Files
-      .createTempDirectory("graft_replay_seed_").toString
-    empty.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    val dest = new java.io.File(target, "batch_00000.parquet")
-    java.nio.file.Files.move(part.toPath, dest.toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    dest.setLastModified(baseEpochMs)
-    Staged(dir, Seq((dest.getPath, 0L)), 0)
+      .createTempDirectory("graft_replay_stage_").toFile
+    try {
+      df.coalesce(1).write.mode("overwrite").parquet(tmp.getPath)
+      val part = tmp.listFiles().filter(_.getName.endsWith(".parquet")).head
+      val dest = new java.io.File(dir, f"batch_$idx%05d.parquet")
+      part.setLastModified(baseEpochMs + idx * 1000L)
+      java.nio.file.Files.move(part.toPath, dest.toPath,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      dest.getPath
+    } finally {
+      Option(tmp.listFiles()).foreach(_.foreach(_.delete()))
+      tmp.delete(): Unit
+    }
   }
 
   /** Open the staged directory as a stream, one BATCH per micro-batch. */

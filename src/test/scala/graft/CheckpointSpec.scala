@@ -101,7 +101,7 @@ class CheckpointSpec extends SparkSpec {
     // survived the restart in the state store.
     import graft.sources.EventReplay
     import graft.vpl.{StreamingEvtSource, VplCompiler, VplParser}
-    val sc = "/root/reference/tests/scenarios"
+    val sc = ReferenceCorpus.path("tests/scenarios")
     val text = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$sc/checkpoint_count_window.vpl")), "UTF-8")
     val prog = VplParser.parse(text)
@@ -144,7 +144,7 @@ class CheckpointSpec extends SparkSpec {
     // both phases stage on the same epoch (afterDelayMs = 0).
     import graft.sources.EventReplay
     import graft.vpl.{StreamingEvtSource, VplCompiler, VplParser}
-    val sc = "/root/reference/tests/scenarios"
+    val sc = ReferenceCorpus.path("tests/scenarios")
     val text = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$sc/checkpoint_session_window.vpl")), "UTF-8")
     val prog = VplParser.parse(text)

@@ -187,6 +187,33 @@ class PipelineApiSpec extends SparkSpec {
     } finally srv.stop()
   }
 
+  test("string values with commas and colons inject intact (/events and /events-batch)") {
+    val srv = PipelineServer.start(spark)
+    try {
+      val (_, d) = req(srv.port, "POST", "/api/v1/pipelines",
+        deployBody("alerts", alertsVpl))
+      val id = d.get("id").asText()
+      def outputs(o: com.fasterxml.jackson.databind.JsonNode) =
+        (0 until o.get("output_events").size()).map { i =>
+          val e = o.get("output_events").get(i)
+          e.get("symbol").asText() -> e.get("price").asDouble()
+        }.sorted
+      val (c1, o1) = req(srv.port, "POST", s"/api/v1/pipelines/$id/events",
+        tick("A, B", 150.0))
+      assert(c1 == 200 && outputs(o1) == Seq("A, B" -> 150.0), o1)
+      // a value that reads like a second `price` field on its own
+      val (c2, o2) = req(srv.port, "POST", s"/api/v1/pipelines/$id/events",
+        tick("x, price: 5", 160.0))
+      assert(c2 == 200 && outputs(o2) == Seq("x, price: 5" -> 160.0), o2)
+      val batch =
+        s"""{"events":[${tick("A, B", 170.0)},${tick("x, price: 5", 180.0)}]}"""
+      val (c3, o3) = req(srv.port, "POST",
+        s"/api/v1/pipelines/$id/events-batch", batch)
+      assert(c3 == 200 && o3.get("accepted").asInt() == 2, o3)
+      assert(outputs(o3) == Seq("A, B" -> 170.0, "x, price: 5" -> 180.0), o3)
+    } finally srv.stop()
+  }
+
   test("reload swaps the program over the standing event log") {
     val srv = PipelineServer.start(spark)
     try {
@@ -403,9 +430,7 @@ class PipelineApiSpec extends SparkSpec {
       val vpl =
         "event TemperatureReading:\n" +
           "    sensor_id: str\n    zone: str\n    value: float\n\n" +
-          new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-            "/root/reference/tests/integration/hvac-e2e/hvac_pipeline.vpl")),
-            "UTF-8")
+          ReferenceCorpus.read("tests/integration/hvac-e2e/hvac_pipeline.vpl")
             .replace("\"mosquitto\"", "\"127.0.0.1\"")
             .replace("port: 1883", s"port: ${mqtt.port}")
             .replace("\"kafka:29092\"", s"\"127.0.0.1:${kafka.port}\"")

@@ -9,7 +9,8 @@ import graft.sources.{EventFile, EventReplay}
   */
 class ReplaySpec extends SparkSpec {
 
-  private val evt = "/root/reference/tests/scenarios/cxo_fraud_detection.evt"
+  private def evt =
+    ReferenceCorpus.path("tests/scenarios/cxo_fraud_detection.evt")
 
   test("staged replay: one micro-batch per BATCH group, watermark-correct windows") {
     val dir = java.nio.file.Files.createTempDirectory("graft_replay_").toString
@@ -51,7 +52,7 @@ class ReplaySpec extends SparkSpec {
     // watermark_windowed.vpl: SensorEvent .watermark(2s) .window(5s)
     // .aggregate(total: count()) — the scenario's own .evt drives the
     // event times (@0s @1s @2s @8s → windows [0,5)=3, [5,10)=1)
-    val sc = "/root/reference/tests/scenarios"
+    val sc = ReferenceCorpus.path("tests/scenarios")
     val vplText = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$sc/watermark_windowed.vpl")))
     val batchResult = graft.vpl.Vpl
@@ -114,5 +115,66 @@ class ReplaySpec extends SparkSpec {
       val batches = q.recentProgress.count(_.numInputRows > 0)
       assert(batches >= 2, s"paced release should span micro-batches, saw $batches")
     } finally q.stop()
+  }
+
+  test("stageEvents writes what stagePhase writes for the same .evt phase") {
+    import java.nio.file.Files
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val events = Seq(
+      """{"event_type":"Tick","fields":{"symbol":"AAPL","price":150.5,"qty":7,"live":true}}""",
+      """{"event_type":"Ping","fields":{}}""",
+      """{"event_type":"Tick","fields":{"symbol":"","price":-2.0,"qty":-3,"live":false}}"""
+    ).map { j =>
+      val ev = mapper.readTree(j)
+      graft.server.PipelineServer.injectedEvent(ev.get("event_type").asText(),
+        ev.get("fields")).fold(e => fail(e), identity)
+    }
+    val evt = Files.createTempFile("graft_parity_", ".evt")
+    Files.writeString(evt,
+      """Tick { symbol: "AAPL", price: 150.5, qty: 7, live: true }
+        |Ping { }
+        |Tick { symbol: "", price: -2.0, qty: -3, live: false }
+        |""".stripMargin)
+    def spool() = EventReplay.stageEmpty(spark,
+      Files.createTempDirectory("graft_parity_").toString)
+    val phase = 3
+    val viaRows = EventReplay.stageEvents(spark, spool(), phase, events)
+    val viaEvt = EventReplay.stagePhase(spark, evt.toString, spool(),
+      phase = phase, afterDelayMs = phase * 1000L, sentinel = false)
+    assert(viaRows.files.map(_._2) == viaEvt.files.map(_._2))
+    assert(viaRows.nBatches == viaEvt.nBatches)
+    val Seq(rowsFile, evtFile) =
+      Seq(viaRows, viaEvt).map(s => new java.io.File(s.files.last._1))
+    assert(rowsFile.getName == "batch_30000.parquet")
+    assert(rowsFile.getName == evtFile.getName)
+    assert(rowsFile.lastModified == evtFile.lastModified)
+    def read(f: java.io.File) = spark.read.parquet(f.getPath)
+    assert(read(rowsFile).schema == read(evtFile).schema)
+    def rows(f: java.io.File) = read(f).orderBy("event_id").collect().toSeq
+    assert(rows(evtFile).map(_.getAs[Long]("event_id")) ==
+      Seq(3000000000L, 3000000001L, 3000000002L))
+    assert(rows(rowsFile) == rows(evtFile))
+    // restore's cut: phase 2 keeps only the seed, phase 3 keeps all
+    assert(EventReplay.upToPhase(viaRows, phase - 1) == viaRows.files.take(1))
+    assert(EventReplay.upToPhase(viaRows, phase) == viaRows.files)
+    Files.deleteIfExists(evt)
+  }
+
+  test("a staged file never shows in the spool before its modtime is pinned") {
+    // a running stream that lists a file under its wall-clock write
+    // time drops every later, older-stamped file as past maxFileAge
+    val dir = java.nio.file.Files.createTempDirectory("graft_pin_").toFile
+    val seed = new java.io.File(dir, "batch_00000.parquet")
+    @volatile var stop = false
+    @volatile var unpinned = 0
+    val watcher = new Thread(() =>
+      while (!stop) {
+        val t = seed.lastModified()
+        if (t != 0L && t != EventReplay.DefaultBaseEpochMs) unpinned += 1
+      })
+    watcher.start()
+    try (1 to 60).foreach(_ => EventReplay.stageEmpty(spark, dir.getPath))
+    finally { stop = true; watcher.join() }
+    assert(unpinned == 0, s"$unpinned polls saw an unpinned modtime")
   }
 }

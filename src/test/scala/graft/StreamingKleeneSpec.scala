@@ -13,7 +13,7 @@ import graft.streaming.PatternStream.{GEv, GStepSpec}
   */
 class StreamingKleeneSpec extends SparkSpec {
 
-  private val sc = "/root/reference/tests/scenarios"
+  private def sc = ReferenceCorpus.path("tests/scenarios")
 
   /** A reference-style Kleene scenario (04_kleene.vpl shape):
     * pattern-sourced stream, `B+`/`B*` between two anchors. Events

@@ -34,7 +34,8 @@ import graft.vpl._
   */
 class VplApamaBenchSpec extends SparkSpec {
 
-  private val scenDir = "/root/reference/benchmarks/apama-comparison/scenarios"
+  private def scenDir =
+    ReferenceCorpus.path("benchmarks/apama-comparison/scenarios")
 
   private def readVpl(s: String): String =
     new String(java.nio.file.Files.readAllBytes(

@@ -25,9 +25,8 @@ import graft.vpl._
   */
 class VplComparisonBenchSpec extends SparkSpec {
 
-  private val benchRs = new String(java.nio.file.Files.readAllBytes(
-    java.nio.file.Paths.get("/root/reference/crates/varpulis-runtime/" +
-      "benches/comparison_benchmark.rs")), UTF_8)
+  private val benchRs = ReferenceCorpus.read(
+    "crates/varpulis-runtime/benches/comparison_benchmark.rs")
 
   /** Every r#"…"# raw string, in file order. */
   private val programs: Seq[String] = {

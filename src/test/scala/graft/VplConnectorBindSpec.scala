@@ -72,9 +72,8 @@ class VplConnectorBindSpec extends SparkSpec {
     val srv = new MiniKafkaBroker(numPartitions = 2)
     try {
       // the ACTUAL reference program, brokers re-aimed at the fixture
-      val vpl = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/root/reference/benchmarks/" +
-          "connector-comparison/varpulis/kafka/01_filter.vpl")), UTF_8)
+      val vpl = ReferenceCorpus
+        .read("benchmarks/connector-comparison/varpulis/kafka/01_filter.vpl")
         .replace("localhost:9092", s"127.0.0.1:${srv.port}")
       val prog = VplParser.parse(vpl)
       val conns = ConnectorBinder.bind(prog)

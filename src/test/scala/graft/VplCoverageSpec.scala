@@ -11,8 +11,8 @@ import graft.vpl._
   */
 class VplCoverageSpec extends SparkSpec {
 
-  private val ex = "/root/reference/examples"
-  private val sc = "/root/reference/tests/scenarios"
+  private def ex = ReferenceCorpus.path("examples")
+  private def sc = ReferenceCorpus.path("tests/scenarios")
 
   private def read(p: String): String =
     new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)))
@@ -29,7 +29,7 @@ class VplCoverageSpec extends SparkSpec {
         case _ => Nil
       }
     val files = (walk(new java.io.File(ex)) ++
-      walk(new java.io.File("/root/reference/tests")))
+      walk(new java.io.File(ReferenceCorpus.path("tests"))))
       .sortBy(_.getPath)
     assert(files.length >= 39, s"expected the full corpus, got ${files.length}")
     val failures = files.flatMap { f =>
@@ -65,8 +65,8 @@ class VplCoverageSpec extends SparkSpec {
         case f if f.getName.endsWith(".vpl") => Seq(f)
         case _ => Nil
       }
-    val files = (walk(new java.io.File("/root/reference/demos")) ++
-      walk(new java.io.File("/root/reference/benchmarks")))
+    val files = (walk(new java.io.File(ReferenceCorpus.path("demos"))) ++
+      walk(new java.io.File(ReferenceCorpus.path("benchmarks"))))
       .sortBy(_.getPath)
     assert(files.length >= 25, s"expected the demo/bench corpus, got ${files.length}")
     val failures = files.flatMap { f =>
@@ -172,8 +172,8 @@ class VplCoverageSpec extends SparkSpec {
         case f if f.getName.endsWith(".vpl") => Seq(f)
         case _ => Nil
       }
-    val files = (walk(new java.io.File("/root/reference/demos")) ++
-      walk(new java.io.File("/root/reference/benchmarks")))
+    val files = (walk(new java.io.File(ReferenceCorpus.path("demos"))) ++
+      walk(new java.io.File(ReferenceCorpus.path("benchmarks"))))
       .sortBy(_.getPath)
     var streams = 0
     val failures = files.flatMap { f =>

@@ -33,7 +33,7 @@ import graft.vpl._
   */
 class VplFlinkBenchSpec extends SparkSpec {
 
-  private val benchDir = "/root/reference/benchmarks/flink-comparison"
+  private def benchDir = ReferenceCorpus.path("benchmarks/flink-comparison")
 
   private def awaitTrue(timeoutMs: Long)(cond: => Boolean): Boolean = {
     val deadline = System.nanoTime() + timeoutMs * 1000000L

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.charset.StandardCharsets.UTF_8
-
 import graft.sources._
 import graft.vpl._
 
@@ -29,9 +27,8 @@ class VplHvacE2eSpec extends SparkSpec {
     val mqtt = new MiniMqttBroker()
     val kafka = new MiniKafkaBroker(numPartitions = 1)
     try {
-      val vpl = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(
-          "/root/reference/tests/integration/hvac-e2e/hvac_pipeline.vpl")), UTF_8)
+      val vpl = ReferenceCorpus
+        .read("tests/integration/hvac-e2e/hvac_pipeline.vpl")
         .replace("\"mosquitto\"", "\"127.0.0.1\"")
         .replace("port: 1883", s"port: ${mqtt.port}")
         .replace("\"kafka:29092\"", s"\"127.0.0.1:${kafka.port}\"")

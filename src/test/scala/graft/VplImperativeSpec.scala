@@ -15,9 +15,8 @@ import graft.vpl._
   */
 class VplImperativeSpec extends SparkSpec {
 
-  private val benchRs = new String(java.nio.file.Files.readAllBytes(
-    java.nio.file.Paths.get("/root/reference/crates/varpulis-runtime/" +
-      "benches/imperative_benchmark.rs")), UTF_8)
+  private val benchRs = ReferenceCorpus.read(
+    "crates/varpulis-runtime/benches/imperative_benchmark.rs")
 
   /** Every r#"…"# raw string in the benchmark source, in order. */
   private val programs: Seq[String] = {

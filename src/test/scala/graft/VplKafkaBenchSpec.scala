@@ -16,8 +16,8 @@ import graft.vpl._
   */
 class VplKafkaBenchSpec extends SparkSpec {
 
-  private val benchDir =
-    "/root/reference/benchmarks/connector-comparison/varpulis/kafka"
+  private def benchDir =
+    ReferenceCorpus.path("benchmarks/connector-comparison/varpulis/kafka")
 
   private def awaitTrue(timeoutMs: Long)(cond: => Boolean): Boolean = {
     val deadline = System.nanoTime() + timeoutMs * 1000000L

@@ -18,7 +18,7 @@ import graft.vpl._
   */
 class VplMandelbrotSpec extends SparkSpec {
 
-  private val base = "/root/reference/examples/mandelbrot"
+  private def base = ReferenceCorpus.path("examples/mandelbrot")
 
   private def read(p: String): String =
     new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)))

@@ -26,8 +26,8 @@ import graft.vpl._
   */
 class VplMqttBenchSpec extends SparkSpec {
 
-  private val benchDir =
-    "/root/reference/benchmarks/connector-comparison/varpulis/mqtt"
+  private def benchDir =
+    ReferenceCorpus.path("benchmarks/connector-comparison/varpulis/mqtt")
 
   private def awaitTrue(timeoutMs: Long)(cond: => Boolean): Boolean = {
     val deadline = System.nanoTime() + timeoutMs * 1000000L

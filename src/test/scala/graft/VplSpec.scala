@@ -12,8 +12,8 @@ import scala.util.Success
   */
 class VplSpec extends SparkSpec {
 
-  private val ex = "/root/reference/examples"
-  private val sc = "/root/reference/tests/scenarios"
+  private def ex = ReferenceCorpus.path("examples")
+  private def sc = ReferenceCorpus.path("tests/scenarios")
 
   private def readFile(p: String): String =
     new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)))

@@ -242,6 +242,25 @@ class WsServerSpec extends SparkSpec {
     } finally { injector.close(); watcher.close(); srv.stop() }
   }
 
+  test("inject_event keeps a comma-bearing string value intact") {
+    val wd = java.nio.file.Files.createTempDirectory("graft_ws_wd_").toFile
+    writeVpl(wd, "alerts.vpl", alertsVpl)
+    val srv = WsServer.start(spark, workdir = wd)
+    val c = new WsClient(srv.port)
+    try {
+      assert(c.handshake().contains("101"))
+      c.sendText("""{"type":"load_file","path":"alerts.vpl"}""")
+      assert(c.readJson().get("success").asBoolean())
+      c.sendText("""{"type":"inject_event","event_type":"Tick","data":{"symbol":"A, B","price":150.5}}""")
+      val got = Seq(c.readJson(), c.readJson())
+        .map(n => n.get("type").asText() -> n).toMap
+      assert(got.get("event_injected").exists(_.get("success").asBoolean()), got)
+      val oe = got("output_event")
+      assert(oe.get("data").get("symbol").asText() == "A, B", oe)
+      assert(oe.get("data").get("price").asDouble() == 150.5, oe)
+    } finally { c.close(); srv.stop() }
+  }
+
   test("load_file is jailed to the workdir; read/parse failures answer load_result") {
     val wd = java.nio.file.Files.createTempDirectory("graft_ws_wd_").toFile
     val outside = java.nio.file.Files.createTempDirectory("graft_ws_out_").toFile

@@ -12,7 +12,7 @@ import graft.SparkSpec
   */
 class RunVplSpec extends SparkSpec {
 
-  private val sc = "/root/reference/tests/scenarios"
+  private def sc = graft.ReferenceCorpus.path("tests/scenarios")
   private def read(p: String): String = new String(
     java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8")
 
