@@ -32,18 +32,19 @@ import org.apache.spark.sql.types.StructType
   *
   * Compression: the consumer decodes the FULL rdkafka codec matrix —
   * UNCOMPRESSED, GZIP, SNAPPY, LZ4 and ZSTD batches (attributes&7 ==
-  * 0|1|2|3|4 — gzip via java.util.zip, lz4/snappy/zstd via the
-  * hand-rolled [[Lz4]]/[[Snappy]]/[[Zstd]] decoders built from the
-  * public wire specs; zero new dependencies, and the batch CRC32C
-  * covers the compressed bytes so integrity is verified BEFORE
-  * decompression — zstd's own content checksum, which covers the
-  * DECODED bytes the CRC cannot see, is additionally verified). The
-  * producer matches the consumer matrix: `compression:
-  * none|gzip|lz4|snappy|zstd` on the connector compresses each
-  * produced batch (rdkafka `compression.type` parity, kafka.rs:19-56),
-  * and the test fixtures keep their OWN independent codec
-  * implementations (real-zstd CLI vectors for zstd) so round trips
-  * still cross two implementations.
+  * 0|1|2|3|4 — gzip via java.util.zip, lz4/snappy/zstd through
+  * [[Lz4]]/[[Snappy]]/[[Zstd]] in `Codecs.scala`, thin wrappers over
+  * the lz4-java, snappy-java and zstd-jni libraries bundled with
+  * Spark, the same ones Kafka's own clients use). The batch CRC32C
+  * covers the compressed bytes, so integrity is verified BEFORE
+  * decompression; the codecs verify their own checksums over the
+  * DECODED bytes when a frame carries them, and no decoded records
+  * block may pass `Codecs.MaxDecoded` (1 GiB). The producer matches
+  * the consumer matrix: `compression: none|gzip|lz4|snappy|zstd` on
+  * the connector compresses each produced batch (rdkafka
+  * `compression.type` parity, kafka.rs:19-56), and the test fixtures
+  * keep their OWN independent lz4/snappy compressors and real-zstd
+  * CLI vectors, so round trips still cross two implementations.
   *
   * Distribution shape matches the other brokered connectors: ONE
   * driver-side poller (the reference's single consumer loop,
@@ -154,23 +155,17 @@ private[graft] object KafkaProto {
     */
   final class NotLeader(msg: String) extends java.io.IOException(msg)
 
-  /** Encode records as ONE magic-2 record batch (uncompressed).
-    * Layout per the spec: baseOffset, batchLength (bytes after the
-    * field), partitionLeaderEpoch, magic=2, crc (CRC32C over
-    * attributes..end), attributes, lastOffsetDelta, base/maxTimestamp,
-    * producerId/Epoch, baseSequence, recordCount, records.
+  /** Encode records as ONE magic-2 record batch with a named codec —
+    * the producer counterpart of the consumer's decode matrix
+    * (none/gzip/lz4/snappy/zstd). Layout per the spec: baseOffset,
+    * batchLength (bytes after the field), partitionLeaderEpoch,
+    * magic=2, crc (CRC32C over attributes..end), attributes,
+    * lastOffsetDelta, base/maxTimestamp, producerId/Epoch,
+    * baseSequence, recordCount, records.
     */
   def encodeBatch(baseOffset: Long,
       records: Seq[(Option[Array[Byte]], Array[Byte], Long)],
-      gzip: Boolean = false): Array[Byte] =
-    encodeBatch(baseOffset, records, if (gzip) "gzip" else "none")
-
-  /** [[encodeBatch]] with a named codec — the producer counterpart
-    * of the consumer's decode matrix (none/gzip/lz4/snappy/zstd).
-    */
-  def encodeBatch(baseOffset: Long,
-      records: Seq[(Option[Array[Byte]], Array[Byte], Long)],
-      codecName: String): Array[Byte] = codecName match {
+      codecName: String = "none"): Array[Byte] = codecName match {
     case "none" | "" =>
       encodeBatchWith(baseOffset, records, codec = 0, identity)
     case "gzip" =>
@@ -237,9 +232,11 @@ private[graft] object KafkaProto {
   }
 
   /** Decode every batch in a record set (a Fetch response may carry
-    * several); validates magic and CRC32C, rejects compressed batches.
+    * several); validates magic and CRC32C, and decompresses each
+    * records block into at most `maxDecoded` bytes.
     */
-  def decodeBatches(recordSet: Array[Byte]): Seq[Record] = {
+  def decodeBatches(recordSet: Array[Byte],
+      maxDecoded: Int = Codecs.MaxDecoded): Seq[Record] = {
     val out = Seq.newBuilder[Record]
     val bb = ByteBuffer.wrap(recordSet)
     // a partial trailing batch (broker hit maxBytes mid-batch) is legal;
@@ -268,40 +265,31 @@ private[graft] object KafkaProto {
         val n = c.i32
         // the records block (everything after the batch header) is the
         // compressed section when attributes bits 0-2 name a codec;
-        // gzip decodes with java.util.zip, lz4/snappy/zstd with the
-        // hand-rolled decoders ([[Lz4]], [[Snappy]], [[Zstd]]) — zero
-        // new dependencies, the FULL rdkafka codec matrix. The batch
-        // CRC32C above covers the COMPRESSED bytes, so integrity is
-        // already checked before decompression (and Zstd verifies its
-        // own content checksum over the DECODED bytes).
+        // gzip decodes with java.util.zip, lz4/snappy/zstd through the
+        // bundled libraries ([[Lz4]], [[Snappy]], [[Zstd]]) — the FULL
+        // rdkafka codec matrix. The batch CRC32C above covers the
+        // COMPRESSED bytes, so integrity is already checked before
+        // decompression (and the frame checksums, when present, cover
+        // the DECODED bytes).
         val recordsLen = start + batchLength - bb.position()
-        val rc: Cursor = codec match {
-          case 0 => c
-          case 1 =>
-            val gz = new java.util.zip.GZIPInputStream(
-              new java.io.ByteArrayInputStream(
-                recordSet, bb.position(), recordsLen))
-            val plain = gz.readAllBytes()
-            bb.position(bb.position() + recordsLen)
-            new Cursor(ByteBuffer.wrap(plain))
-          case 2 =>
-            val plain = Snappy.decode(recordSet, bb.position(), recordsLen)
-            bb.position(bb.position() + recordsLen)
-            new Cursor(ByteBuffer.wrap(plain))
-          case 3 =>
-            val plain = Lz4.decodeFrame(recordSet, bb.position(), recordsLen)
-            bb.position(bb.position() + recordsLen)
-            new Cursor(ByteBuffer.wrap(plain))
-          case 4 =>
-            val plain = Zstd.decode(recordSet, bb.position(), recordsLen)
-            bb.position(bb.position() + recordsLen)
-            new Cursor(ByteBuffer.wrap(plain))
-          case other =>
-            throw new IllegalArgumentException(
-              s"kafka: codec $other batches not supported — graft " +
-                "decodes the full rdkafka matrix: uncompressed, gzip " +
-                "(java.util.zip), lz4, snappy and zstd (hand-rolled " +
-                "decoders); attribute bits 5-7 name no further codec.")
+        val rc: Cursor = if (codec == 0) c else {
+          val at = bb.position()
+          val plain = codec match {
+            case 1 => new java.util.zip.GZIPInputStream(new java.io.ByteArrayInputStream(
+              recordSet, at, recordsLen)).readAllBytes()
+            case 2 => Snappy.decode(recordSet, at, recordsLen, cap = maxDecoded)
+            case 3 => Lz4.decodeFrame(recordSet, at, recordsLen, cap = maxDecoded)
+            case 4 => Zstd.decode(recordSet, at, recordsLen, cap = maxDecoded)
+            case other =>
+              throw new IllegalArgumentException(
+                s"kafka: codec $other batches not supported — graft " +
+                  "decodes the full rdkafka matrix: uncompressed, gzip " +
+                  "(java.util.zip), lz4, snappy and zstd (the lz4-java, " +
+                  "snappy-java and zstd-jni libraries bundled with Spark); " +
+                  "attribute bits 5-7 name no further codec.")
+          }
+          bb.position(at + recordsLen)
+          new Cursor(ByteBuffer.wrap(plain))
         }
         var i = 0
         while (i < n) {
@@ -589,7 +577,7 @@ final class KafkaClient(host: String, port: Int,
         if (err != 0)
           throw new java.io.IOException(
             s"kafka: Fetch($topic/$partition@$offset) ${errName(err)}")
-        recs = rs.filter(_.nonEmpty).map(decodeBatches)
+        recs = rs.filter(_.nonEmpty).map(decodeBatches(_))
           .getOrElse(Nil).filter(_.offset >= offset)
       }
     }

@@ -10,10 +10,11 @@ import graft.sources._
   * `compression.type` parity, reference kafka.rs:19-56). Pins:
   *   - wire attributes bits name the codec and the records block
   *     actually shrinks on compressible payloads;
-  *   - the hand-rolled lz4/snappy ENCODERS round-trip through the
-  *     hand-rolled decoders across stored/compressed/multi-block
-  *     shapes, and lz4's header-checksum byte cross-checks against
-  *     the test fixture's INDEPENDENT xxHash32 (zstd's
+  *   - the lz4/snappy ENCODERS round-trip through the decoders across
+  *     stored/compressed/multi-block shapes, raw snappy blocks from
+  *     the INDEPENDENT test-side compressor decode through the
+  *     unframed path, and lz4's header-checksum byte cross-checks
+  *     against the test fixture's INDEPENDENT xxHash32 (zstd's
   *     cross-implementation evidence is ZstdSpec's real-zstd-CLI
   *     fixture vectors);
   *   - end-to-end per codec: sink write → loopback broker (which
@@ -71,7 +72,7 @@ class KafkaCompressionSpec extends SparkSpec {
       ("abc" * 200000).getBytes(UTF_8), // highly repetitive
       Array.tabulate(100000)(i => // LCG noise → incompressible/stored
         (((i * 1103515245 + 12345) >>> 16) & 0xff).toByte),
-      Array.tabulate(5 * 1024 * 1024)(i => (i % 251).toByte)) // 2 blocks
+      Array.tabulate(5 * 1024 * 1024)(i => (i % 251).toByte)) // many blocks
     shapes.foreach { data =>
       val framed = Lz4.compressFrame(data)
       val back = Lz4.decodeFrame(framed, 0, framed.length)
@@ -97,9 +98,9 @@ class KafkaCompressionSpec extends SparkSpec {
         (((i * 1103515245 + 12345) >>> 16) & 0xff).toByte),
       Array.tabulate(200000)(i => (i % 7).toByte)) // > 1 xerial block
     shapes.foreach { data =>
-      val raw = Snappy.compressRaw(data, 0, data.length)
+      val raw = SnappyFixture.compressRaw(data)
       assert(java.util.Arrays.equals(
-        Snappy.decodeRaw(raw, 0, raw.length), data),
+        Snappy.decode(raw, 0, raw.length), data),
         s"raw round trip failed at ${data.length} bytes")
       val framed = Snappy.compress(data)
       assert(java.util.Arrays.equals(

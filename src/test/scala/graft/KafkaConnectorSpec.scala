@@ -180,7 +180,7 @@ class KafkaConnectorSpec extends SparkSpec {
     val recs = Seq(
       (Some("k1".getBytes(UTF_8)), """{"id":1}""".getBytes(UTF_8), 1000L),
       (None, """{"id":2}""".getBytes(UTF_8), 1500L))
-    val batch = KafkaProto.encodeBatch(7L, recs, gzip = true)
+    val batch = KafkaProto.encodeBatch(7L, recs, "gzip")
     // attributes bits 0-2 must mark gzip (codec 1)
     val attrOff = 8 + 4 + 4 + 1 + 4
     assert((((batch(attrOff) & 0xff) << 8) | (batch(attrOff + 1) & 0xff)) == 1)
@@ -208,7 +208,7 @@ class KafkaConnectorSpec extends SparkSpec {
       // accepts the client's compressed encoding too
       val gzBatch = KafkaProto.encodeBatch(0L,
         Seq((None, """{"id":1,"kind":"a","value":0.5}""".getBytes(UTF_8), 10L)),
-        gzip = true)
+        "gzip")
       assert(srv.parseBatch(gzBatch).exists(_.length == 1),
         "fixture must decode a gzip produce")
       pre.produce("gz", 0, Seq(

@@ -222,4 +222,38 @@ class MalformedFrameSpec extends SparkSpec {
       assert(p2.terminalError.isDefined)
     } finally p2.stop()
   }
+
+  test("Kafka: a batch that decodes past the size cap fails typed, never OOM") {
+    // each records block below is a few bytes to a few KiB that
+    // claims or decodes to more than the decoded-size cap
+    val records = Seq((None: Option[Array[Byte]], "{}".getBytes("UTF-8"), 5L))
+    def batch(codec: Int, block: Array[Byte]): Array[Byte] =
+      KafkaProto.encodeBatchWith(0L, records, codec, _ => block)
+    // snappy, default 1 GiB cap: a 5-byte raw block whose preamble
+    // claims 2^31-9 bytes is refused before anything is allocated
+    val e1 = intercept[Snappy.SnappyError](KafkaProto.decodeBatches(
+      batch(2, Array(0xF7, 0xFF, 0xFF, 0xFF, 0x07).map(_.toByte))))
+    assert(e1.getMessage.startsWith("snappy: ") && e1.getMessage.contains("cap"), e1.getMessage)
+    // zstd and lz4 against a 1 MiB cap, so the test holds at most that
+    // much: what decodes past it fails as the typed error
+    val cap = 1 << 20
+    // zstd: no content size, 128 KiB window, then RLE blocks of 128 KiB
+    // (4 bytes each) until the output passes the cap
+    val zstd = new java.io.ByteArrayOutputStream()
+    zstd.write(Array(0x28, 0xB5, 0x2F, 0xFD, 0x00, 0x38).map(_.toByte))
+    val nBlocks = cap / (128 * 1024) + 1
+    for (i <- 1 to nBlocks) // header: size << 3 | RLE << 1 | last
+      zstd.write(Array(0x02 | (if (i == nBlocks) 1 else 0), 0x00, 0x10, 'z').map(_.toByte))
+    val e2 = intercept[Zstd.ZstdError](
+      KafkaProto.decodeBatches(batch(4, zstd.toByteArray), maxDecoded = cap))
+    assert(e2.getMessage.startsWith("zstd: ") && e2.getMessage.contains("cap"), e2.getMessage)
+    // the frame itself is well formed: under a cap it fits in, it
+    // decodes to every RLE byte
+    val z = zstd.toByteArray
+    assert(Zstd.decode(z, 0, z.length, cap = 2 * cap).length == nBlocks * 128 * 1024)
+    val lz4 = Lz4.compressFrame(new Array[Byte](2 * cap))
+    val e3 = intercept[Lz4.Lz4Error](
+      KafkaProto.decodeBatches(batch(3, lz4), maxDecoded = cap))
+    assert(e3.getMessage.startsWith("lz4: ") && e3.getMessage.contains("cap"), e3.getMessage)
+  }
 }

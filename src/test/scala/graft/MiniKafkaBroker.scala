@@ -66,8 +66,8 @@ final class MiniKafkaBroker(
   @volatile var gzipFetch = false
   /** Fetch responses carry lz4-frame-compressed batches
     * (attributes=3), encoded by the INDEPENDENT test-side compressor
-    * (Lz4Fixture) — proves the hand-rolled product decoder against
-    * a second implementation.
+    * (Lz4Fixture) — proves the product decoder against a second
+    * implementation.
     */
   @volatile var lz4Fetch = false
   /** Fetch responses carry xerial-framed snappy batches
@@ -129,10 +129,11 @@ final class MiniKafkaBroker(
     c.i64; c.i64; c.i16; c.i32 // maxTs, producerId, producerEpoch, baseSeq
     val n = c.i32
     // decompression of the records block (sink-side compression
-    // lands here since r13: gzip via java.util.zip stays an
-    // independent decoder; lz4/snappy reuse the product decoders —
-    // encoder/decoder independence for those lives in Lz4Spec/
-    // SnappySpec, whose fixtures implement their OWN compressors)
+    // lands here: gzip via java.util.zip stays an independent
+    // decoder; lz4/snappy/zstd go through the product codec wrappers
+    // over the bundled libraries — encoder/decoder independence lives
+    // in Lz4Spec/SnappySpec, whose fixtures implement their OWN
+    // compressors, and ZstdSpec's real-CLI fixtures)
     val recordsLen = 12 + batchLength - bb.position()
     val rc: Cursor = codec match {
       case 0 => c
@@ -359,7 +360,9 @@ final class MiniKafkaBroker(
                           recs, codec = 2, SnappyFixture.encodeXerial(_))
                         else if (zstdFetch)
                           KafkaProto.encodeBatch(off, recs, "zstd")
-                        else KafkaProto.encodeBatch(off, recs, gzip = gzipFetch)
+                        else if (gzipFetch)
+                          KafkaProto.encodeBatch(off, recs, "gzip")
+                        else KafkaProto.encodeBatch(off, recs)
                       if (corruptNextFetch) {
                         corruptNextFetch = false
                         batch(batch.length - 1) =

@@ -5,13 +5,14 @@ import java.nio.charset.StandardCharsets.UTF_8
 import graft.sources.{KafkaClient, KafkaPoller, KafkaProto, Snappy}
 import org.apache.spark.sql.types._
 
-/** The hand-rolled snappy decoder against (a) byte-level vectors
-  * derived by hand from the public format description — literal tags,
-  * all three copy-offset widths, the overlapping-copy RLE idiom,
-  * extended literal lengths — (b) round trips through the INDEPENDENT
-  * test-side compressor in both raw and xerial-framed forms, and
-  * (c) the full Kafka path: a snappy-compressed fetch spooled by the
-  * poller.
+/** The snappy codec (snappy-java plus the xerial framing walk)
+  * against (a) byte-level raw-block vectors derived by hand from the
+  * public format description — literal tags, all three copy-offset
+  * widths, the overlapping-copy RLE idiom, extended literal lengths —
+  * which `Snappy.decode` takes as unframed raw input, (b) round trips
+  * through the INDEPENDENT test-side compressor in both raw and
+  * xerial-framed forms, and (c) the full Kafka path: a
+  * snappy-compressed fetch spooled by the poller.
   */
 class SnappySpec extends SparkSpec {
 
@@ -25,42 +26,42 @@ class SnappySpec extends SparkSpec {
   test("raw block: hand-crafted spec vectors decode exactly") {
     // preamble 5, one literal element of 5 ("hello"):
     // tag = (5-1)<<2 | 00
-    assert(Snappy.decodeRaw(
+    assert(Snappy.decode(
       Array[Byte](5, 0x10, 'h', 'e', 'l', 'l', 'o'), 0, 7).toSeq ==
       "hello".getBytes(UTF_8).toSeq)
     // tag-01 copy (1-byte offset): 4 literals "abcd" then copy
     // offset 4 len 4 => "abcdabcd". tag 01: len=((tag>>2)&7)+4,
     // offset = (tag>>5)<<8 | next. len 4 -> bits 0; offset 4 -> 0x04
-    assert(Snappy.decodeRaw(
+    assert(Snappy.decode(
       Array[Byte](8, 0x0C, 'a', 'b', 'c', 'd', 0x01, 0x04), 0, 8).toSeq ==
       "abcdabcd".getBytes(UTF_8).toSeq)
     // tag-10 copy (2-byte offset), OVERLAPPING (RLE): 1 literal 'x'
     // then copy offset 1 len 7 => "x"*8. tag 10: len=(tag>>2)+1=7 ->
     // tag = 6<<2|2 = 0x1A
-    assert(Snappy.decodeRaw(
+    assert(Snappy.decode(
       Array[Byte](8, 0x00, 'x', 0x1A, 0x01, 0x00), 0, 6).toSeq ==
       ("x" * 8).getBytes(UTF_8).toSeq)
     // tag-11 copy (4-byte offset): same as above with a wide offset
-    assert(Snappy.decodeRaw(
+    assert(Snappy.decode(
       Array[Byte](8, 0x00, 'y', 0x1B, 0x01, 0x00, 0x00, 0x00), 0, 8).toSeq ==
       ("y" * 8).getBytes(UTF_8).toSeq)
     // extended literal length: tag 60<<2 (=0xF0), next byte len-1=84
     // => 85 literals
     val lits = Array.fill[Byte](85)('q')
     val pre = Array[Byte](85, 0xF0.toByte, 84)
-    assert(Snappy.decodeRaw(pre ++ lits, 0, pre.length + 85).toSeq ==
+    assert(Snappy.decode(pre ++ lits, 0, pre.length + 85).toSeq ==
       lits.toSeq)
   }
 
   test("raw block: malformed inputs are loud SnappyErrors") {
     // preamble says 9 but only 5 bytes decode
-    intercept[Snappy.SnappyError](Snappy.decodeRaw(
+    intercept[Snappy.SnappyError](Snappy.decode(
       Array[Byte](9, 0x10, 'h', 'e', 'l', 'l', 'o'), 0, 7))
     // copy before output start
-    intercept[Snappy.SnappyError](Snappy.decodeRaw(
+    intercept[Snappy.SnappyError](Snappy.decode(
       Array[Byte](8, 0x00, 'x', 0x1A, 0x05, 0x00), 0, 6))
     // literal running past block end
-    intercept[Snappy.SnappyError](Snappy.decodeRaw(
+    intercept[Snappy.SnappyError](Snappy.decode(
       Array[Byte](9, 0x20, 'a'), 0, 3))
   }
 
@@ -89,7 +90,7 @@ class SnappySpec extends SparkSpec {
     texts.foreach { t =>
       val raw = t.getBytes(UTF_8)
       val block = SnappyFixture.compressRaw(raw)
-      assert(Snappy.decodeRaw(block, 0, block.length).toSeq == raw.toSeq)
+      assert(Snappy.decode(block, 0, block.length).toSeq == raw.toSeq)
       val framed = SnappyFixture.encodeXerial(raw)
       assert(Snappy.decode(framed, 0, framed.length).toSeq == raw.toSeq)
       if (raw.length > 1000) assert(framed.length < raw.length,
